@@ -516,11 +516,12 @@ def main() -> None:
     print(line)
     # Durable copy of the SAME line: a consumer-side stdout/stderr
     # interleaving race (round 10's driver parse failure) can never
-    # lose the round's numbers — parse from either source.
+    # lose the round's numbers — parse from either source.  It goes to
+    # the gitignored bench_out/, so a run leaves the tree clean.
     try:
-        out_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"
-        )
+        out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_out")
+        os.makedirs(out_dir, exist_ok=True)
+        out_path = os.path.join(out_dir, "BENCH_LOCAL.json")
         with open(out_path, "w", encoding="utf-8") as fh:
             fh.write(line + "\n")
         print(f"[bench] JSON line also written to {out_path}", file=sys.stderr)

@@ -6,8 +6,8 @@ Two layers (SURVEY.md §7):
 * **Ingest layer** — Structured-Streaming CDC pipeline reproducing the
   reference's buffered keyed-upsert semantics
   (``/root/reference/db/ops.go:11-122``) with Spark-distributed merge,
-  parquet table state and an explicit ``cursors`` checkpoint table
-  (``/root/reference/db/cursor.go``).
+  parquet table state, and a per-module cursor committed in the same
+  atomic manifest swap as the tables (reference ``db/cursor.go``).
 * **Query layer** — the relational surface the reference delegates to
   ClickHouse (SURVEY.md §2.2), expressed as Spark SQL / DataFrame plans,
   plus large-scale training-data-pipeline operators (dedup, similarity

@@ -272,10 +272,11 @@ def cmd_setup(spark, args) -> int:
 
 
 def cmd_cursors(spark, args) -> int:
+    from substreams_sink_clickhouse_spark.catalog import Catalog
     from substreams_sink_clickhouse_spark.streaming.cursors import CursorStore
-    import os
+    from substreams_sink_clickhouse_spark.streaming.pipeline import TableStateStore
 
-    store = CursorStore(spark, os.path.join(args.warehouse, "cursors"))
+    store = CursorStore(TableStateStore(spark, args.warehouse, Catalog()))
     if args.action == "list":
         rows = [
             {

@@ -102,8 +102,9 @@ def iterate_session(spark: SparkSession) -> SparkSession:
     return got
 
 
-#: applicationId -> memoized streaming child session (see stream_session).
-_STREAM_SESSIONS: dict[str, SparkSession] = {}
+#: (applicationId, width) -> memoized streaming child session (see
+#: stream_session).
+_STREAM_SESSIONS: dict[tuple[str, int], SparkSession] = {}
 
 
 def stream_session(spark: SparkSession) -> SparkSession:
@@ -122,19 +123,24 @@ def stream_session(spark: SparkSession) -> SparkSession:
     45.3 -> 28.3 s, watermarked agg 18.9 -> 13.8 s — results
     hash-identical at every width (hash partitioning only moves
     state, never changes it).  On a 32-core context the default width
-    is 32, exactly the previous fixed value."""
+    is 32, exactly the previous fixed value.  A value that is not a
+    positive integer raises ``ValueError``."""
+    raw = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
+    width = spark.sparkContext.defaultParallelism
+    if raw:
+        if not raw.strip().isdigit() or int(raw) < 1:
+            raise ValueError(
+                f"$SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer, got {raw!r}"
+            )
+        width = int(raw)
     app = spark.sparkContext.applicationId
-    got = _STREAM_SESSIONS.get(app)
+    got = _STREAM_SESSIONS.get((app, width))
     if got is None:
-        for stale in [k for k in _STREAM_SESSIONS if k != app]:
+        for stale in [k for k in _STREAM_SESSIONS if k[0] != app]:
             del _STREAM_SESSIONS[stale]
         got = tune_session(spark.newSession())
-        width = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-        got.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(int(width) if width else spark.sparkContext.defaultParallelism),
-        )
-        _STREAM_SESSIONS[app] = got
+        got.conf.set("spark.sql.shuffle.partitions", str(width))
+        _STREAM_SESSIONS[(app, width)] = got
     return got
 
 

@@ -1,28 +1,27 @@
-"""Cursor checkpoint table (reference O10/O11).
+"""Stream cursors (reference O10/O11), committed in the table manifest.
 
 The reference keeps one cursor row per output-module hash in a
 ``cursors(id, cursor, block_num, block_id)`` table, updated in the same
 transaction as each flush (/root/reference/db/cursor.go:120-125,
-db/flush.go:52-58).  Here the cursors table is a tiny single-file
-parquet dataset (the reference itself suggests a Memory-engine table,
-README.md:94) written atomically via write-new + rename; Structured
-Streaming's checkpoint gives restart offsets, while this table gives
-the *queryable* stream position and the module-hash mismatch policy.
+db/flush.go:52-58).  Here the cursor rides in the same atomic
+``manifest.json`` replace that commits an epoch's table state
+(``TableStateStore.commit_epoch``): the manifest's ``cursors`` map,
+keyed by module hash, is the one commit point for rows and stream
+position, so no crash can leave the cursor ahead of the tables.
+Structured Streaming's checkpoint gives restart offsets, while the
+cursor gives the *queryable* stream position and the module-hash
+mismatch policy.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from substreams_sink_clickhouse_spark.catalog import CURSORS_SCHEMA, validate_cursors_schema
 from substreams_sink_clickhouse_spark.errors import EngineError
-from substreams_sink_clickhouse_spark.functions.localdata import empty_df, local_df
+
+if TYPE_CHECKING:
+    from substreams_sink_clickhouse_spark.streaming.pipeline import TableStateStore
 
 
 @dataclass
@@ -32,6 +31,15 @@ class Cursor:
     block_num: int
     block_id: str
 
+    @classmethod
+    def for_epoch(cls, module_hash: str, epoch_id: int, block_num: int, block_id: str) -> Cursor:
+        """The cursor an epoch commits: its highest applied block."""
+        return cls(module_hash, f"epoch:{epoch_id}:block:{block_num}", block_num, block_id)
+
+    def entry(self) -> dict:
+        """This cursor's value in the manifest's ``cursors`` map."""
+        return {"cursor": self.cursor, "block_num": self.block_num, "block_id": self.block_id}
+
 
 class ModuleHashMismatch(EngineError):
     """No cursor for the requested module hash, but others exist
@@ -39,29 +47,16 @@ class ModuleHashMismatch(EngineError):
 
 
 class CursorStore:
-    """Parquet-backed cursors table with atomic replace."""
+    """Read/delete view over the manifest's ``cursors`` map."""
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    def _exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") for f in os.listdir(self.path)
-        )
-
-    def read(self) -> DataFrame:
-        if not self._exists():
-            return empty_df(self.spark, CURSORS_SCHEMA)
-        df = self.spark.read.parquet(self.path)
-        validate_cursors_schema(df.schema)
-        return df
+    def __init__(self, state: TableStateStore):
+        self.state = state
 
     def all_cursors(self) -> dict[str, Cursor]:
         """GetAllCursors (db/cursor.go:26-46)."""
         return {
-            r["id"]: Cursor(r["id"], r["cursor"], r["block_num"], r["block_id"])
-            for r in self.read().collect()
+            mh: Cursor(mh, **c)
+            for mh, c in self.state.read_manifest().get("cursors", {}).items()
         }
 
     def get_cursor(self, module_hash: str, on_mismatch: str = "error") -> Cursor | None:
@@ -83,40 +78,19 @@ class CursorStore:
             )
         if on_mismatch == "ignore":
             return None
-        # warn: cursor at highest block (db/cursor.go:92-101) — a tiny
-        # driver-side max; the distributed form is max_by(id, block_num).
+        # warn: cursor at highest block (db/cursor.go:92-101)
         return max(cursors.values(), key=lambda c: (c.block_num, c.id))
 
     def write_cursor(self, cursor: Cursor) -> None:
-        """Upsert one cursor row, atomically replacing the table
-        (InsertCursor/UpdateCursor, db/cursor.go:104-125)."""
-        current = self.read().filter(F.col("id") != cursor.id)
-        updated = current.unionByName(
-            local_df(
-                self.spark,
-                [(cursor.id, cursor.cursor, cursor.block_num, cursor.block_id)],
-                CURSORS_SCHEMA,
-            )
-        )
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        updated.coalesce(1).write.mode("overwrite").parquet(tmp)
-        old = f"{self.path}__old_{uuid.uuid4().hex[:8]}"
-        if os.path.isdir(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        if os.path.isdir(old):
-            shutil.rmtree(old, ignore_errors=True)
+        """Upsert one cursor outside an epoch commit
+        (InsertCursor/UpdateCursor, db/cursor.go:104-125); epoch commits
+        record theirs inside ``commit_epoch``."""
+        self.state.update_cursors(lambda cursors: cursors.update({cursor.id: cursor.entry()}))
 
     def delete_cursor(self, module_hash: str) -> None:
         """DeleteCursor (db/cursor.go:127-135)."""
-        remaining = self.read().filter(F.col("id") != module_hash)
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        remaining.coalesce(1).write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(self.path):
-            shutil.rmtree(self.path)
-        os.rename(tmp, self.path)
+        self.state.update_cursors(lambda cursors: cursors.pop(module_hash, None))
 
     def delete_all(self) -> None:
         """DeleteAllCursors (db/cursor.go:137-143)."""
-        if os.path.isdir(self.path):
-            shutil.rmtree(self.path)
+        self.state.update_cursors(dict.clear)

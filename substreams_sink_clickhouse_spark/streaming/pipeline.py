@@ -2,14 +2,15 @@
 
 ``readStream`` (JSONL/parquet DatabaseChanges) → decode → validate →
 distributed merge (operators/merge.py) → per-epoch versioned parquet
-table state + cursor row.  The reference's single DB transaction per
+table state + cursor.  The reference's single DB transaction per
 flush (/root/reference/db/flush.go:12-69) has no parquet analog, so
 effectively-once is achieved the way Spark sinks do it:
 
 * every micro-batch (epoch) writes each affected table's NEW state to
   a fresh versioned directory ``<warehouse>/<table>/v<epoch>``;
 * a tiny JSON manifest is then swapped atomically (``os.replace``) to
-  point readers at the new versions + record the applied epoch;
+  point readers at the new versions and record the applied epoch and
+  the cursor — the ONE commit point of an epoch;
 * on restart/replay of an epoch the manifest shows it already applied
   and the batch becomes a no-op (idempotent replay over the
   at-least-once file source — same net semantics as the reference's
@@ -131,9 +132,10 @@ class TableStateStore:
     as file-level rewrite + snapshot manifest; we keep it explicit and
     dependency-free.)
 
-    ``history`` holds full bucket-map snapshots, so reorg rollback
-    (a manifest edit) and vacuum (drop unreferenced bucket dirs) work
-    unchanged on the bucketed layout.
+    ``history`` holds full bucket-map snapshots with their modulus, so
+    reorg rollback (a manifest edit) and vacuum (drop unreferenced
+    bucket dirs) work unchanged on the bucketed layout.  Only this
+    class writes the manifest.
 
     Round 5 adds DELETION-VECTOR commits (Delta/Iceberg
     merge-on-read, dependency-free): a bucket value may be a layered
@@ -357,145 +359,162 @@ class TableStateStore:
         epoch_id: int,
         new_states: dict[str, tuple[DataFrame, list[int]]],
         cursor: Cursor | None,
-        cursor_store: CursorStore | None,
         sidecar_states: dict[str, tuple[DataFrame, DataFrame, list[int]]] | None = None,
     ) -> None:
         """Write each affected bucket's new state, then swap the
-        manifest + cursor.  ``new_states`` maps table -> (bucket-subset
-        state DF, affected bucket ids) — the full-rewrite path.
-        ``sidecar_states`` maps table -> (delta rows DF, (src, pk)
-        mask DF, affected bucket ids) — the deletion-vector path:
-        per affected bucket this appends ONE small delta file and
-        replaces the bucket's deletion vector with (old dv rows ∪ new
-        masks), so bytes written are O(changed rows), not O(bucket)
-        (see _read_bmap_subset for the read side).  The manifest swap
-        is the commit point either way; untouched buckets are carried
+        manifest, which records the tables, the applied epoch and the
+        cursor in one atomic replace.  ``new_states`` maps table ->
+        (bucket-subset state DF, affected bucket ids) — the
+        full-rewrite path.  ``sidecar_states`` maps table -> (delta
+        rows DF, (src, pk) mask DF, affected bucket ids) — the
+        deletion-vector path: per affected bucket this appends ONE
+        small delta file and replaces the bucket's deletion vector with
+        (old dv rows ∪ new masks), so bytes written are O(changed
+        rows), not O(bucket) (see _read_bmap_subset for the read
+        side).  The manifest swap is the only durable metadata write
+        and the commit point either way; untouched buckets are carried
         forward by reference, never rewritten."""
         manifest = self.read_manifest()
+        tables = manifest["tables"]
         for name, (delta, mask, affected) in (sidecar_states or {}).items():
-            info = self.catalog.get(name)
             n_b = self.table_n_buckets(name)
-            prior = manifest["tables"].get(name)
-            prior_bmap = dict(prior["buckets"]) if prior else {}
-            # 1. delta data files, partitioned by bucket
-            vdir = os.path.join(self.warehouse_dir, name, f"v{epoch_id}")
-            (
-                delta.withColumn("__b", self.bucket_expr(info.primary_key, n_b))
-                .repartition(max(2, len(affected)), F.col("__b"))
-                .write.mode("overwrite")
-                .partitionBy("__b")
-                .parquet(vdir)
+            bmap = dict(tables[name]["buckets"]) if name in tables else {}
+            table_dir = os.path.join(self.warehouse_dir, name)
+            deltas = self._write_buckets(
+                delta, self.catalog.get(name).primary_key, n_b,
+                os.path.join(table_dir, f"v{epoch_id}"), len(affected),
             )
-            delta_written = (
-                {
-                    int(d.split("=", 1)[1])
-                    for d in os.listdir(vdir)
-                    if d.startswith("__b=")
-                }
-                if os.path.isdir(vdir)
-                else set()
-            )
-            # 2. deletion vectors: new masks ∪ the affected buckets'
-            # existing dv rows (ONE current dv per bucket)
+            # ONE current dv per bucket: new masks ∪ its existing dv rows
             old_dv_paths = [
-                p
-                for b in affected
-                if (p := self._entry_dv(prior_bmap.get(str(b))))
+                p for b in affected if (p := self._entry_dv(bmap.get(str(b))))
             ]
-            dv_df = mask.withColumn(
-                "__b", F.pmod(F.xxhash64(F.col("pk")), F.lit(n_b))
-            )
             if old_dv_paths:
-                old_dv = (
-                    self.spark.read.schema("src LONG, pk STRING")
-                    .parquet(*old_dv_paths)
-                    .withColumn("__b", F.pmod(F.xxhash64(F.col("pk")), F.lit(n_b)))
+                mask = mask.unionByName(
+                    self.spark.read.schema("src LONG, pk STRING").parquet(*old_dv_paths)
                 )
-                dv_df = dv_df.unionByName(old_dv)
-            dvdir = os.path.join(self.warehouse_dir, name, f"dv{epoch_id}")
-            (
-                dv_df.repartition(max(2, len(affected)), F.col("__b"))
-                .write.mode("overwrite")
-                .partitionBy("__b")
-                .parquet(dvdir)
+            dvs = self._write_buckets(
+                mask, "pk", n_b, os.path.join(table_dir, f"dv{epoch_id}"), len(affected)
             )
-            dv_written = (
-                {
-                    int(d.split("=", 1)[1])
-                    for d in os.listdir(dvdir)
-                    if d.startswith("__b=")
-                }
-                if os.path.isdir(dvdir)
-                else set()
-            )
-            # 3. manifest: append layers / swap dv per affected bucket
-            bmap = prior_bmap
-            history = prior.get("history", []) if prior else []
-            if prior is not None:
-                history = history + [
-                    {"epoch": prior["epoch"], "buckets": dict(prior["buckets"])}
-                ]
             for b in affected:
                 old = bmap.get(str(b))
                 layers = self._entry_layers(old)
-                if b in delta_written:
-                    layers = layers + [
-                        {"epoch": epoch_id, "path": os.path.join(vdir, f"__b={b}")}
-                    ]
-                dv_path = (
-                    os.path.join(dvdir, f"__b={b}")
-                    if b in dv_written
-                    else self._entry_dv(old)
-                )
-                if not layers and not dv_path:
-                    bmap[str(b)] = None
-                else:
-                    bmap[str(b)] = {"files": layers, "dv": dv_path}
-            manifest["tables"][name] = {
-                "epoch": epoch_id,
-                "buckets": bmap,
-                "history": history,
-                "n_buckets": n_b,
-            }
+                if b in deltas:
+                    layers = layers + [{"epoch": epoch_id, "path": deltas[b]}]
+                dv_path = dvs.get(b, self._entry_dv(old))
+                bmap[str(b)] = {"files": layers, "dv": dv_path} if layers or dv_path else None
+            self._install(manifest, name, epoch_id, bmap, n_b)
         for name, (df, affected) in new_states.items():
-            info = self.catalog.get(name)
             n_b = self.table_n_buckets(name)
-            vdir = os.path.join(self.warehouse_dir, name, f"v{epoch_id}")
-            (
-                df.withColumn("__b", self.bucket_expr(info.primary_key, n_b))
-                .repartition(max(2, len(affected)), F.col("__b"))
-                .write.mode("overwrite")
-                .partitionBy("__b")
-                .parquet(vdir)
+            written = self._write_buckets(
+                df, self.catalog.get(name).primary_key, n_b,
+                os.path.join(self.warehouse_dir, name, f"v{epoch_id}"), len(affected),
             )
-            written = {
-                int(d.split("=", 1)[1])
-                for d in os.listdir(vdir)
-                if d.startswith("__b=")
-            }
-            prior = manifest["tables"].get(name)
-            bmap = dict(prior["buckets"]) if prior else {}
-            history = prior.get("history", []) if prior else []
-            if prior is not None:
-                history = history + [
-                    {"epoch": prior["epoch"], "buckets": dict(prior["buckets"])}
-                ]
-            for b in affected:
-                # a bucket whose rows were all deleted writes no dir
-                bmap[str(b)] = os.path.join(vdir, f"__b={b}") if b in written else None
-            manifest["tables"][name] = {
-                "epoch": epoch_id,
-                "buckets": bmap,
-                "history": history,
-                "n_buckets": n_b,
-            }
+            bmap = dict(tables[name]["buckets"]) if name in tables else {}
+            # a bucket whose rows were all deleted writes no dir
+            bmap.update({str(b): written.get(b) for b in affected})
+            self._install(manifest, name, epoch_id, bmap, n_b)
         manifest["applied_epochs"] = sorted(set(manifest["applied_epochs"]) | {epoch_id})
         if cursor is not None:
-            blocks = manifest.get("epoch_blocks", {})
-            blocks[str(epoch_id)] = cursor.block_num
-            manifest["epoch_blocks"] = blocks
-        if cursor is not None and cursor_store is not None:
-            cursor_store.write_cursor(cursor)
+            manifest.setdefault("epoch_blocks", {})[str(epoch_id)] = cursor.block_num
+            manifest.setdefault("cursors", {})[cursor.id] = cursor.entry()
+        self._write_manifest(manifest)
+
+    def _write_buckets(
+        self, df: DataFrame, pk_col: str, n_b: int, vdir: str, n_parts: int, sort=None
+    ) -> dict[int, str]:
+        """Write ``df`` under ``vdir`` as one ``__b=<bucket>`` directory
+        per pk-bucket (modulus ``n_b``), optionally clustered by
+        ``sort`` inside each bucket; returns bucket -> directory for
+        the buckets written (a bucket left with no rows writes none)."""
+        out = df.withColumn("__b", self.bucket_expr(pk_col, n_b)).repartition(
+            max(2, n_parts), F.col("__b")
+        )
+        if sort is not None:
+            # Pre-sorting by (__b, sort) satisfies the file writer's
+            # required ordering, so no extra sort is inserted.
+            out = out.sortWithinPartitions("__b", sort)
+        out.write.mode("overwrite").partitionBy("__b").parquet(vdir)
+        names = os.listdir(vdir) if os.path.isdir(vdir) else []
+        return {
+            int(d.split("=", 1)[1]): os.path.join(vdir, d)
+            for d in names
+            if d.startswith("__b=")
+        }
+
+    @staticmethod
+    def _install(manifest: dict, name: str, epoch: int, bmap: dict, n_b: int) -> None:
+        """Make ``bmap`` the table's live bucket map under modulus
+        ``n_b``, snapshotting the prior entry (epoch, bucket map,
+        modulus) into its history for rollback, time travel and
+        vacuum."""
+        prior = manifest["tables"].get(name)
+        history = []
+        if prior is not None:
+            history = prior.get("history", []) + [
+                {k: v for k, v in prior.items() if k != "history"}
+            ]
+        manifest["tables"][name] = {
+            "epoch": epoch, "buckets": bmap, "history": history, "n_buckets": n_b,
+        }
+
+    def sidecar_ready(self, name: str, buckets: list[int]) -> bool:
+        """True when the table has committed rows and every touched
+        bucket can take one more deletion-vector layer: fewer than
+        MAX_SIDECAR_LAYERS data layers, and a dv within
+        MAX_DV_BYTES_PER_BUCKET.  Pure-delete epochs grow the dv with
+        no new data layer, so the layer cap alone never triggers
+        compaction; the full-rewrite fallback clears both."""
+        entry = self.read_manifest()["tables"].get(name)
+        if entry is None or not any(entry["buckets"].values()):
+            return False  # initial load: CREATE fast path is cheaper
+        return all(
+            len(self._entry_layers(val)) < MAX_SIDECAR_LAYERS
+            and _parquet_dir_bytes(self._entry_dv(val)) <= MAX_DV_BYTES_PER_BUCKET
+            for val in (entry["buckets"].get(str(b)) for b in buckets)
+        )
+
+    def update_cursors(self, edit: Callable[[dict], object]) -> None:
+        """Apply ``edit`` to the manifest's ``cursors`` map and commit
+        it: cursor maintenance outside an epoch commit."""
+        manifest = self.read_manifest()
+        edit(manifest.setdefault("cursors", {}))
+        self._write_manifest(manifest)
+
+    def rollback_to_block(self, last_valid_block: int) -> None:
+        """Reorg rollback, one manifest write: every table returns to
+        its newest snapshot at or below the newest epoch whose cursor
+        block is <= ``last_valid_block``; later epochs leave
+        ``applied_epochs`` and ``epoch_blocks``, and cursors past that
+        epoch's block rewind to it (with an empty ``block_id``: the
+        manifest records each epoch's block number, not its id)."""
+        manifest = self.read_manifest()
+        blocks = manifest.get("epoch_blocks", {})
+        valid = [int(e) for e, b in blocks.items() if b <= last_valid_block]
+        if not valid:
+            raise RuntimeError(
+                f"no committed epoch at or below block {last_valid_block}; "
+                "re-sync from genesis (reference behavior: error out, "
+                "sinker.go:176-178)"
+            )
+        target = max(valid)
+        for name, entry in list(manifest["tables"].items()):
+            if entry["epoch"] <= target:
+                continue  # already at or before the fork point
+            kept = [h for h in entry.get("history", []) if h["epoch"] <= target]
+            if kept:
+                # reversed: of equal-epoch snapshots (maintenance keeps
+                # the epoch) the latest wins
+                newest = max(reversed(kept), key=lambda h: h["epoch"])
+                manifest["tables"][name] = {**newest, "history": kept}
+            else:
+                del manifest["tables"][name]
+        manifest["applied_epochs"] = [e for e in manifest["applied_epochs"] if e <= target]
+        manifest["epoch_blocks"] = {e: b for e, b in blocks.items() if int(e) <= target}
+        head = blocks[str(target)]
+        cursors = manifest.get("cursors", {})
+        for mh, c in cursors.items():
+            if c["block_num"] > head:
+                cursors[mh] = Cursor.for_epoch(mh, target, head, "").entry()
         self._write_manifest(manifest)
 
     def vacuum(self, keep_epochs: int = 2) -> list[str]:
@@ -567,10 +586,9 @@ class TableStateStore:
         df: DataFrame,
         affected: list[int],
         kind: str,
-        sort_col: str | None = None,
+        sort=None,
         new_n_buckets: int | None = None,
-        sort_expr=None,
-    ) -> str:
+    ) -> None:
         """Shared commit path for non-epoch mutations (OPTIMIZE / TTL /
         REBUCKET): write the affected buckets' new state under
         ``<table>/<kind><seq>``, snapshot the prior bucket map to
@@ -579,44 +597,19 @@ class TableStateStore:
         progress, so epoch replay/idempotency semantics are unaffected.
         With ``new_n_buckets`` the bucket map is REPLACED under the new
         modulus (``affected`` then lists the new bucket ids)."""
-        info = self.catalog.get(name)
         manifest = self.read_manifest()
         seq = int(manifest.get("mutation_seq", 0)) + 1
         manifest["mutation_seq"] = seq
         n_b = new_n_buckets or self.table_n_buckets(name)
-        vdir = os.path.join(self.warehouse_dir, name, f"{kind}{seq}")
-        out = df.withColumn(
-            "__b", self.bucket_expr(info.primary_key, n_b)
-        ).repartition(max(2, len(affected)), F.col("__b"))
-        if sort_expr is not None:
-            # Z-order maintenance: cluster inside each bucket by the
-            # Morton key so row-group min/max stats stay narrow on
-            # EVERY participating column (functions/zorder.py).
-            out = out.sortWithinPartitions("__b", sort_expr)
-        elif sort_col is not None:
-            # Pre-sorting by (__b, sort_col) satisfies the file
-            # writer's required ordering, so no extra sort is inserted
-            # and rows land pk-clustered inside each bucket file.
-            out = out.sortWithinPartitions("__b", sort_col)
-        out.write.mode("overwrite").partitionBy("__b").parquet(vdir)
-        written = {
-            int(d.split("=", 1)[1]) for d in os.listdir(vdir) if d.startswith("__b=")
-        }
+        written = self._write_buckets(
+            df, self.catalog.get(name).primary_key, n_b,
+            os.path.join(self.warehouse_dir, name, f"{kind}{seq}"), len(affected), sort,
+        )
         prior = manifest["tables"][name]
         bmap = {} if new_n_buckets else dict(prior["buckets"])
-        history = prior.get("history", []) + [
-            {"epoch": prior["epoch"], "buckets": dict(prior["buckets"])}
-        ]
-        for b in affected:
-            bmap[str(b)] = os.path.join(vdir, f"__b={b}") if b in written else None
-        manifest["tables"][name] = {
-            "epoch": prior["epoch"],
-            "buckets": bmap,
-            "history": history,
-            "n_buckets": n_b,
-        }
+        bmap.update({str(b): written.get(b) for b in affected})
+        self._install(manifest, name, prior["epoch"], bmap, n_b)
         self._write_manifest(manifest)
-        return vdir
 
     def optimize(
         self,
@@ -675,7 +668,6 @@ class TableStateStore:
         if not affected:
             return None
         before = sum(p["n_files"] for p in self.parts(name))
-        info = self.catalog.get(name)
         state = (
             self.bucket_state(name, affected)
             if only_fragmented
@@ -686,15 +678,16 @@ class TableStateStore:
             # rows during the compaction rewrite (one extra exchange
             # on the full row, the same cost class as the rewrite)
             state = state.distinct()
-        sort_expr = None
+        # rows land pk-clustered inside each bucket file; with zorder,
+        # clustered by the Morton key instead, so row-group min/max
+        # stats stay narrow on EVERY participating column
+        # (functions/zorder.py)
+        sort = self.catalog.get(name).primary_key
         if zorder:
             from substreams_sink_clickhouse_spark.functions.zorder import zorder_key
 
-            sort_expr = zorder_key(state, zorder)
-        self._commit_maintenance(
-            name, state, affected, "opt",
-            sort_col=info.primary_key, sort_expr=sort_expr,
-        )
+            sort = zorder_key(state, zorder)
+        self._commit_maintenance(name, state, affected, "opt", sort=sort)
         after = sum(p["n_files"] for p in self.parts(name))
         return {"files_before": before, "files_after": after}
 
@@ -810,7 +803,7 @@ class TableStateStore:
             self.table_state(name),
             list(range(new_n_buckets)),
             "rbk",
-            sort_col=self.catalog.get(name).primary_key,
+            sort=self.catalog.get(name).primary_key,
             new_n_buckets=new_n_buckets,
         )
         return {"n_buckets_before": before, "n_buckets_after": new_n_buckets}
@@ -926,7 +919,7 @@ class ChangesIngestPipeline:
         #: updated with each epoch's CREATE rows (ClickHouse
         #: materialized-view semantics: MVs see inserted rows).
         self._rollups: dict[str, list] = {}
-        self.cursors = CursorStore(spark, os.path.join(warehouse_dir, "cursors"))
+        self.cursors = CursorStore(self.state)
         self.checkpoint_dir = checkpoint_dir
         self.module_hash = module_hash
         self.on_batch = on_batch
@@ -1014,45 +1007,21 @@ class ChangesIngestPipeline:
                 # several tables each filter the reduced ops — cache so
                 # the fold is computed once, not once per table
                 live = live.cache()
-            manifest_tables = self.state.read_manifest()["tables"]
 
             def sidecar_eligible(name: str, buckets: list[int]) -> bool:
-                """Deletion-vector commit iff the table has committed
-                state, no touched bucket is at the layer cap, and the
-                window is small enough to BROADCAST — the sidecar apply
-                probes the bucket state with the window's ops as the
-                broadcast side (apply_table_ops_delta), so an op count
-                past the broadcast budget must take the shuffle-based
+                """Deletion-vector commit iff the store can take one
+                more layer on every touched bucket and the window is
+                small enough to BROADCAST — the sidecar apply probes
+                the bucket state with the window's ops as the broadcast
+                side (apply_table_ops_delta), so an op count past the
+                broadcast budget must take the shuffle-based
                 full-rewrite reconcile instead.  Sidecar writes are
-                O(changed rows) whenever they apply; the layer cap
-                bounds read-side width, and the rewrite fallback
-                doubles as compaction."""
-                if self.write_mode != "auto":
-                    return False
-                if window_ops.get(name, 0) > MAX_SIDECAR_WINDOW_OPS:
-                    return False
-                entry = manifest_tables.get(name)
-                if entry is None:
-                    return False  # initial load: CREATE fast path is cheaper
-                bmap = entry["buckets"]
-                if not any(bmap.get(str(b)) for b in bmap):
-                    return False
-                # dv byte budget: pure-delete epochs grow the dv with
-                # no new data layer, so the layer cap alone never
-                # triggers compaction — an over-budget dv forces this
-                # bucket onto the full-rewrite path, which clears it
-                if any(
-                    _parquet_dir_bytes(
-                        TableStateStore._entry_dv(bmap.get(str(b)))
-                    )
-                    > MAX_DV_BYTES_PER_BUCKET
-                    for b in buckets
-                ):
-                    return False
-                return all(
-                    len(TableStateStore._entry_layers(bmap.get(str(b))))
-                    < MAX_SIDECAR_LAYERS
-                    for b in buckets
+                O(changed rows) whenever they apply; the rewrite
+                fallback doubles as compaction."""
+                return (
+                    self.write_mode == "auto"
+                    and window_ops.get(name, 0) <= MAX_SIDECAR_WINDOW_OPS
+                    and self.state.sidecar_ready(name, buckets)
                 )
 
             new_states: dict[str, tuple[DataFrame, list[int]]] = {}
@@ -1084,16 +1053,10 @@ class ChangesIngestPipeline:
                         buckets,
                     )
                 observations.append(obs)
-            cursor = Cursor(
-                id=self.module_hash,
-                cursor=f"epoch:{epoch_id}:block:{head_num}",
-                block_num=head_num,
-                block_id=head_id,
-            )
+            cursor = Cursor.for_epoch(self.module_hash, epoch_id, head_num, head_id)
             tp = mark("plan", tp)
             self.state.commit_epoch(
-                epoch_id, new_states, cursor, self.cursors,
-                sidecar_states=sidecar_states or None,
+                epoch_id, new_states, cursor, sidecar_states=sidecar_states or None
             )
             for c in delta_caches:
                 c.unpersist()
@@ -1272,7 +1235,8 @@ class ChangesIngestPipeline:
           manifest is the commit point — a replayed epoch rewrites the
           same buckets or no-ops), so the retry loop can never
           double-apply a flush;
-        * the cursor table advances only inside the committed batch.
+        * the cursor advances only inside the manifest swap that
+          commits the batch's tables.
 
         Together: no loss, no duplication, across any number of
         restarts.  Returns the number of restarts performed.  Raises
@@ -1336,31 +1300,8 @@ class ChangesIngestPipeline:
         deliver final blocks (/root/reference/sinker/sinker.go:176-178).
         Our versioned table state can do better: every committed epoch
         retains its predecessor's directories, so rolling back to the
-        newest epoch at-or-below the fork point is a manifest edit.
+        newest epoch at-or-below the fork point is a manifest edit
+        (``TableStateStore.rollback_to_block``) that also rewinds the
+        cursor.
         """
-        manifest = self.state.read_manifest()
-        history = manifest.get("epoch_blocks", {})
-        valid = [int(e) for e, b in history.items() if b <= last_valid_block]
-        if not valid:
-            raise RuntimeError(
-                f"no committed epoch at or below block {last_valid_block}; "
-                "re-sync from genesis (reference behavior: error out, "
-                "sinker.go:176-178)"
-            )
-        target_epoch = max(valid)
-        for name, entry in list(manifest["tables"].items()):
-            if entry["epoch"] <= target_epoch:
-                continue  # already at or before the fork point
-            candidates = entry.get("history", [])
-            rollback = [h for h in candidates if h["epoch"] <= target_epoch]
-            if rollback:
-                newest = max(rollback, key=lambda h: h["epoch"])
-                manifest["tables"][name] = {
-                    "epoch": newest["epoch"],
-                    "buckets": dict(newest["buckets"]),
-                    "history": candidates,
-                }
-            else:
-                del manifest["tables"][name]
-        manifest["applied_epochs"] = [e for e in manifest["applied_epochs"] if e <= target_epoch]
-        self.state._write_manifest(manifest)
+        self.state.rollback_to_block(last_valid_block)

@@ -133,6 +133,9 @@ def test_undo_rolls_back_to_fork_point(spark, tmp_path):
     assert {r["id"]: r["number"] for r in pipe.table("block_meta").collect()} == {
         "k1": 1, "k2": 2,
     }
+    # the cursor rewinds with the tables, so a restart resumes at the fork
+    assert eng.cursor().block_num == 2
+    assert pipe.state.read_manifest()["epoch_blocks"] == {"0": 2}
 
 
 def test_undo_below_history_errors(spark, tmp_path):

@@ -132,6 +132,38 @@ def test_rebucket_rescales_and_ingest_continues(spark, tmp_path):
     assert rows["k0"] == 777 and len(rows) == 8
 
 
+def test_rollback_after_rebucket_keeps_modulus(spark, tmp_path):
+    """Reorg rollback restores a snapshot's modulus with its bucket
+    map: after rebucket to 4 and an undo, the next epoch still buckets
+    keys mod 4, so it reads and replaces the key's real bucket."""
+    eng, pipe = _engine_with_epochs(spark, tmp_path, n_epochs=1, keys_per_epoch=8)
+    pipe.state.rebucket("block_meta", 4)
+    # a key whose bucket differs under the store default (16) and 4
+    key = next(
+        k
+        for k in (f"k{i}" for i in range(8))
+        if spark.sql(
+            f"SELECT pmod(xxhash64('{k}'), 16) <> pmod(xxhash64('{k}'), 4) AS d"
+        ).collect()[0]["d"]
+    )
+    stream = tmp_path / "changes"
+    for block, k, n in ((10, "k1", "10"), (11, "k2", "11")):  # epochs A, B
+        (stream / f"b{block}.jsonl").write_text(
+            _msg(block, [("block_meta", k, 1, "UPDATE", {"number": n})])
+        )
+        pipe = eng.ingest(str(stream), _catalog())
+    pipe.handle_block_undo_signal(last_valid_block=10)
+    assert pipe.state.table_n_buckets("block_meta") == 4
+    (stream / "b12.jsonl").write_text(
+        _msg(12, [("block_meta", key, 1, "UPDATE", {"number": "777"})])
+    )
+    pipe = eng.ingest(str(stream), _catalog())
+    assert pipe.state.table_n_buckets("block_meta") == 4
+    rows = [(r["id"], r["number"]) for r in pipe.table("block_meta").collect()]
+    expected = {f"k{i}": i for i in range(8)} | {"k1": 10, key: 777}
+    assert sorted(rows) == sorted(expected.items())
+
+
 def test_optimize_sorts_by_pk_within_bucket(spark, tmp_path):
     import pyarrow.parquet as pq
 
@@ -279,7 +311,7 @@ def test_optimize_zorder_narrows_file_ranges(spark, tmp_path):
     rows = spark.range(4096).selectExpr(
         "CAST(hash(id) AS STRING) AS id", "id % 64 AS x", "CAST(id / 64 AS LONG) AS y"
     )
-    store.commit_epoch(1, {"pts": (rows, [0])}, None, None)
+    store.commit_epoch(1, {"pts": (rows, [0])}, None)
     # fragment each optimize output into ~16 files so per-file min/max
     # stats are observable (the row-group granularity stand-in)
     spark.conf.set("spark.sql.files.maxRecordsPerFile", "256")
@@ -336,7 +368,7 @@ def test_optimize_deduplicate_drops_identical_rows(spark, tmp_path):
     rows = spark.createDataFrame(
         [("a", 1), ("a", 1), ("b", 2), ("b", 3)], schema
     )
-    store.commit_epoch(1, {"dups": (rows, [0, 1])}, None, None)
+    store.commit_epoch(1, {"dups": (rows, [0, 1])}, None)
     assert store.table_state("dups").count() == 4
     store.optimize("dups", deduplicate=True)
     got = sorted(tuple(r) for r in store.table_state("dups").collect())

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 import substreams_sink_clickhouse_spark.session as S
 
 
@@ -37,6 +39,32 @@ def test_stream_session_width_env_override(spark):
     finally:
         if old is None:
             del os.environ["SPARK_GRAFT_STREAM_SHUFFLE"]
+        else:
+            os.environ["SPARK_GRAFT_STREAM_SHUFFLE"] = old
+        S._STREAM_SESSIONS.clear()
+
+
+def test_stream_session_width_env_fails_loudly_and_keys_memo(spark):
+    """A bad $SPARK_GRAFT_STREAM_SHUFFLE names the variable; a changed
+    width gets its own child instead of the memoized one."""
+    S._STREAM_SESSIONS.clear()
+    old = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
+    try:
+        for bad in ("wide", "0", "-2"):
+            os.environ["SPARK_GRAFT_STREAM_SHUFFLE"] = bad
+            with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_SHUFFLE"):
+                S.stream_session(spark)
+        os.environ["SPARK_GRAFT_STREAM_SHUFFLE"] = "6"
+        six = S.stream_session(spark)
+        os.environ["SPARK_GRAFT_STREAM_SHUFFLE"] = "3"
+        three = S.stream_session(spark)
+        assert three is not six
+        assert three.conf.get("spark.sql.shuffle.partitions") == "3"
+        os.environ["SPARK_GRAFT_STREAM_SHUFFLE"] = "6"
+        assert S.stream_session(spark) is six
+    finally:
+        if old is None:
+            os.environ.pop("SPARK_GRAFT_STREAM_SHUFFLE", None)
         else:
             os.environ["SPARK_GRAFT_STREAM_SHUFFLE"] = old
         S._STREAM_SESSIONS.clear()

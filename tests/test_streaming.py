@@ -4,6 +4,7 @@ golden, plus restart/recovery with no loss and no duplicate
 application."""
 
 import json
+import os
 
 import pytest
 from pyspark.sql import types as T
@@ -14,7 +15,10 @@ from substreams_sink_clickhouse_spark.streaming.cursors import (
     CursorStore,
     ModuleHashMismatch,
 )
-from substreams_sink_clickhouse_spark.streaming.pipeline import ChangesIngestPipeline
+from substreams_sink_clickhouse_spark.streaming.pipeline import (
+    ChangesIngestPipeline,
+    TableStateStore,
+)
 
 
 def _msg(block_num, changes):
@@ -135,7 +139,7 @@ def test_epoch_replay_is_idempotent(spark, tmp_path, block_meta_catalog, changes
 
 
 def test_cursor_store_roundtrip_and_mismatch(spark, tmp_path):
-    store = CursorStore(spark, str(tmp_path / "cursors"))
+    store = CursorStore(TableStateStore(spark, str(tmp_path / "wh"), Catalog()))
     assert store.get_cursor("h1") is None
     store.write_cursor(Cursor("h1", "c1", 10, "0xa"))
     store.write_cursor(Cursor("h2", "c2", 20, "0xb"))
@@ -148,6 +152,53 @@ def test_cursor_store_roundtrip_and_mismatch(spark, tmp_path):
     assert store.get_cursor("h3", on_mismatch="warn").id == "h2"  # highest block
     store.delete_cursor("h2")
     assert store.get_cursor("h2", on_mismatch="ignore") is None
+
+
+def test_crash_at_manifest_swap_commits_nothing(
+    spark, tmp_path, block_meta_catalog, changes_df, monkeypatch
+):
+    """The manifest replace is an epoch's only durable metadata write:
+    a crash there leaves the tables, the applied epochs and the cursor
+    unchanged, and replaying the epoch matches a run with no crash."""
+    epochs = [
+        [(1, "0x1", 1, "block_meta", "k1", "CREATE", {"number": "1"}),
+         (1, "0x1", 2, "block_meta", "k2", "CREATE", {"number": "2"})],
+        [(2, "0x2", 1, "block_meta", "k1", "UPDATE", {"number": "11"}),
+         (2, "0x2", 2, "block_meta", "k2", "DELETE", {})],
+    ]
+
+    def committed(pipe):
+        return (
+            sorted((r["id"], r["number"]) for r in pipe.table("block_meta").collect()),
+            pipe.state.read_manifest()["applied_epochs"],
+            pipe.cursors.get_cursor("mod-hash-1"),
+        )
+
+    clean = _pipeline(spark, block_meta_catalog, tmp_path, name="clean")
+    for epoch_id, rows in enumerate(epochs):
+        clean.process_batch(changes_df(rows), epoch_id=epoch_id)
+
+    pipe = _pipeline(spark, block_meta_catalog, tmp_path, name="crash")
+    pipe.process_batch(changes_df(epochs[0]), epoch_id=0)
+    before = committed(pipe)
+    real_write = TableStateStore._write_manifest
+    writes = []
+
+    def crash_once(self, manifest):
+        writes.append(manifest)
+        if len(writes) == 1:
+            raise OSError("crash at the manifest swap")
+        real_write(self, manifest)
+
+    monkeypatch.setattr(TableStateStore, "_write_manifest", crash_once)
+    with pytest.raises(OSError, match="crash at the manifest swap"):
+        pipe.process_batch(changes_df(epochs[1]), epoch_id=1)
+    assert committed(pipe) == before
+    pipe.process_batch(changes_df(epochs[1]), epoch_id=1)  # replay
+    assert len(writes) == 2  # one metadata write per commit attempt
+    assert committed(pipe) == committed(clean)
+    assert committed(pipe)[2].block_num == 2
+    assert not os.path.exists(os.path.join(pipe.state.warehouse_dir, "cursors"))
 
 
 def test_unknown_table_fails_stream_batch(spark, tmp_path, block_meta_catalog, changes_df):
