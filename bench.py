@@ -109,24 +109,6 @@ ORACLE_TABLES = [
 ]
 
 
-def stage_shuffle_read_total(ui_port: int) -> int:
-    """App-wide completed-stage shuffle read bytes (Spark REST) — the
-    same probe tools/shuffle_budget.py uses; bracketing one execution
-    with two calls attributes its shuffle volume."""
-    import urllib.request
-
-    with urllib.request.urlopen(
-        f"http://localhost:{ui_port}/api/v1/applications", timeout=10
-    ) as r:
-        app = json.load(r)[0]["id"]
-    with urllib.request.urlopen(
-        f"http://localhost:{ui_port}/api/v1/applications/{app}/stages?status=complete",
-        timeout=10,
-    ) as r:
-        stages = json.load(r)
-    return sum(s.get("shuffleReadBytes", 0) for s in stages)
-
-
 def loadavg_1m() -> float | None:
     """1-minute load average, or None where /proc is unavailable."""
     try:
@@ -269,17 +251,12 @@ def bench_ingest(spark, sf_dir: str) -> float:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entry_mod
+    from substreams_sink_clickhouse_spark.profile import stage_totals
     from substreams_sink_clickhouse_spark.registry import all_specs
     from substreams_sink_clickhouse_spark.session import get_spark, interactive_session
 
-    # UI on: the per-query shuffle-byte line item reads REST stage
-    # totals (outside every timed window)
-    spark = get_spark("bench", extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    try:
-        ui_port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[1])
-    except Exception:
-        ui_port = None
     queries = entry_mod.queries()
     queries["scaleproof_simhash_fold"] = _scaleproof_simhash_fold
 
@@ -389,18 +366,14 @@ def main() -> None:
             best = min(best, time.time() - t0)
             time.sleep(0.2)
         timings[name] = round(best, 3)
-        # one extra (untimed) execution bracketed by REST stage totals:
+        # one extra (untimed) execution bracketed by stage totals:
         # the artifact then self-adjudicates plan shape (a lost
         # broadcast or dropped partial aggregate shows up as a
         # shuffle-byte jump) the way it already self-adjudicates load
-        if ui_port is not None:
-            try:
-                evict_dedup_cores()
-                before = stage_shuffle_read_total(ui_port)
-                fn(sess(name), sf_dir).count()
-                shuffle_bytes[name] = stage_shuffle_read_total(ui_port) - before
-            except Exception:
-                pass
+        evict_dedup_cores()
+        before = stage_totals(spark)["shuffle_read_bytes"]
+        fn(sess(name), sf_dir).count()
+        shuffle_bytes[name] = stage_totals(spark)["shuffle_read_bytes"] - before
 
     # Paired oracle: the SAME box, back-to-back with the sequential
     # engine numbers above, so BENCH_rN.json carries its own

@@ -15,18 +15,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from substreams_sink_clickhouse_spark.errors import CursorTableError, UnknownTableError
-
-#: Exact required shape of the cursors checkpoint table
-#: (/root/reference/db/db.go:140-178, DDL db/db.go:232-242).
-CURSORS_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("cursor", T.StringType(), True),
-        T.StructField("block_num", T.LongType(), True),
-        T.StructField("block_id", T.StringType(), True),
-    ]
-)
+from substreams_sink_clickhouse_spark.errors import UnknownTableError
 
 #: Example workload table from /root/reference/devel/schema.sql:1-12.
 BLOCK_META_SCHEMA = T.StructType(
@@ -141,20 +130,6 @@ class Catalog:
             pk = overrides.get(table.name, "id" if "id" in schema.fieldNames() else schema.fieldNames()[0])
             catalog.register(TableInfo(table.name, schema, pk))
         return catalog
-
-
-def validate_cursors_schema(schema: T.StructType) -> None:
-    """Exact-shape check of the cursors table
-    (/root/reference/db/db.go:140-178): four columns, exact names and
-    types, ``id`` first (the primary key)."""
-    expected = [(f.name, f.dataType) for f in CURSORS_SCHEMA.fields]
-    actual = [(f.name, f.dataType) for f in schema.fields]
-    if actual != expected:
-        raise CursorTableError(
-            "cursors table schema mismatch: "
-            f"expected {[(n, d.simpleString()) for n, d in expected]}, "
-            f"got {[(n, d.simpleString()) for n, d in actual]}"
-        )
 
 
 def setup(spark: SparkSession, ddl_statements: list[str] | None = None, ddl_path: str | None = None) -> None:

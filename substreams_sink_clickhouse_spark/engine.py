@@ -32,7 +32,7 @@ class Engine:
         self.config = config or EngineConfig()
         self._pipelines: dict[str, ChangesIngestPipeline] = {}
         #: query-result cache (ClickHouse ``use_query_cache`` parity):
-        #: translated-query text -> (epoch fingerprint, persisted DF).
+        #: translated-query text -> (state fingerprint, persisted DF).
         self._query_cache: dict[str, tuple[tuple, DataFrame]] = {}
         #: bounded in-memory query history (system.query_log parity);
         #: surfaced as the ``system_query_log`` view on demand.
@@ -41,6 +41,9 @@ class Engine:
         #: path, folded into the cache fingerprint by file mtime so
         #: use_query_cache invalidates when external data changes too.
         self._externals: dict[str, str] = {}
+        #: module hash -> manifest version its sunk-table views read
+        #: (see _sync_views).
+        self._view_versions: dict[str, int] = {}
 
     @classmethod
     def local(cls, config: EngineConfig | None = None, **spark_kwargs) -> "Engine":
@@ -130,8 +133,7 @@ class Engine:
         # catalog views (the reference introspects via system.tables /
         # system.columns, db/operations.go:211-277; dots aren't legal
         # in Spark view names, so: system_tables / system_columns)
-        for name in catalog.tables:
-            pipe.table(name).createOrReplaceTempView(name)
+        self._sync_views(pipe)
         from substreams_sink_clickhouse_spark.sources.clickhouse_ddl import (
             register_system_views,
         )
@@ -141,22 +143,27 @@ class Engine:
 
     # -- query surface ------------------------------------------------
 
-    def _epoch_fingerprint(self) -> tuple:
-        """(module_hash, table, epoch) triples across live pipelines —
-        changes whenever any ingest commits, which is exactly when
-        cached results go stale."""
-        fp = []
-        for mh, pipe in sorted(self._pipelines.items()):
-            try:
-                manifest = pipe.state.read_manifest()
-            except (OSError, ValueError, KeyError):
-                # a pipeline whose warehouse is mid-initialization has
-                # no manifest yet; treat as epoch-less rather than
-                # failing the cache probe
-                continue
-            for name, entry in sorted(manifest.get("tables", {}).items()):
-                fp.append((mh, name, entry.get("epoch")))
-            fp.append((mh, "__mutation_seq", manifest.get("mutation_seq", 0)))
+    def _sync_views(self, pipe: ChangesIngestPipeline) -> None:
+        """Register ``pipe``'s sunk tables as SQL views and remember the
+        manifest version they read.  A view is a plan fixed at
+        registration, so :meth:`sql` calls this before every query and
+        it re-registers only when the version has moved."""
+        version = pipe.state.read_manifest()["version"]
+        if self._view_versions.get(pipe.module_hash) != version:
+            self._view_versions[pipe.module_hash] = version
+            for name in pipe.catalog.tables:
+                pipe.table(name).createOrReplaceTempView(name)
+
+    def _state_fingerprint(self) -> tuple:
+        """The live pipelines' manifest versions (every commit, epoch or
+        maintenance, moves one) plus the external tables' mtimes —
+        changes exactly when cached results go stale.  A pipeline with
+        views counts at the version :meth:`sql` just synced them to."""
+        fp = [
+            (mh, self._view_versions[mh] if mh in self._view_versions
+             else pipe.state.read_manifest()["version"])
+            for mh, pipe in sorted(self._pipelines.items())
+        ]
         # external tables: newest mtime under the registered path —
         # RECURSIVE, because the standard Spark layout nests files in
         # partition subdirectories (path/part=1/file.parquet) whose
@@ -222,6 +229,8 @@ class Engine:
         same (translated) query text, invalidated automatically when
         any ingest epoch or storage mutation advances.  Opt-in, like
         ClickHouse's setting — correctness-sensitive callers skip it."""
+        for mh in self._view_versions:
+            self._sync_views(self._pipelines[mh])
         fill_spec = None
         if "SYSTEM_TIME" in query.upper():
             query = self._rewrite_system_time(query)
@@ -301,7 +310,7 @@ class Engine:
             if fill_spec is None
             else query + "\n-- " + fill_spec.cache_token()
         )
-        fp = self._epoch_fingerprint()
+        fp = self._state_fingerprint()
         hit = self._query_cache.get(cache_key)
         if hit is not None and hit[0] == fp:
             return hit[1]
@@ -409,29 +418,29 @@ class Engine:
     def table_as_of(
         self,
         name: str,
-        epoch: int | None = None,
+        version: int | None = None,
         block: int | None = None,
         module_hash: str | None = None,
     ) -> DataFrame:
         """Time travel on a sunk table: its committed state as of a
-        flush ``epoch`` or as of a stream ``block`` number (resolved
-        through the cursor's block-per-epoch provenance, reference
-        analog db/cursor.go:120-125).  Snapshot history is free with
-        the versioned-bucket layout (subject to vacuum retention).
-        Exactly one of ``epoch`` / ``block`` must be given."""
-        if (epoch is None) == (block is None):
-            raise ValueError("pass exactly one of epoch= / block=")
+        manifest ``version`` or as of a stream ``block`` number
+        (resolved through the block each of the table's snapshots
+        records, reference analog db/cursor.go:120-125).  Snapshot
+        history is free with the versioned-bucket layout (subject to
+        vacuum retention).  Exactly one of ``version`` / ``block`` must
+        be given."""
+        if (version is None) == (block is None):
+            raise ValueError("pass exactly one of version= / block=")
         for mh, pipe in sorted(self._pipelines.items()):
             if module_hash not in (None, mh):
                 continue
             if name in pipe.catalog.tables:
-                e = pipe.state.epoch_for_block(block) if epoch is None else epoch
-                return pipe.state.table_state_as_of(name, e)
+                return pipe.state.table_state_as_of(name, version, block)
         raise ValueError(f"unknown sunk table: {name!r}")
 
     def _rewrite_system_time(self, query: str) -> str:
         """SQL:2011 temporal-query surface over the DV snapshot layers:
-        ``FROM t FOR SYSTEM_TIME AS OF [BLOCK|EPOCH] <n>`` resolves the
+        ``FROM t FOR SYSTEM_TIME AS OF [BLOCK|VERSION] <n>`` resolves the
         table to its historical state (BLOCK is the default unit — the
         reference's provenance domain) by registering an as-of temp
         view and substituting its name.  Runs before dialect
@@ -454,7 +463,7 @@ class Engine:
             )
             df = self.table_as_of(
                 name,
-                epoch=n if kind == "EPOCH" else None,
+                version=n if kind == "VERSION" else None,
                 block=n if kind == "BLOCK" else None,
             )
             view = f"__asof_{name}_{kind.lower()}{n}"
@@ -463,7 +472,7 @@ class Engine:
 
         pat = _re.compile(
             r"\b(\w+)\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+"
-            r"(?:(EPOCH|BLOCK)\s+)?(\d+)",
+            r"(?:(VERSION|BLOCK)\s+)?(\d+)",
             flags=_re.IGNORECASE,
         )
         return "".join(
@@ -489,8 +498,9 @@ class Engine:
         if pipe is None:
             raise ValueError("no ingest pipeline active; call ingest()/pipeline() first")
         info = pipe.catalog.add_column(table, column, dtype)
-        # refresh the SQL view to expose the widened schema
-        pipe.table(table).createOrReplaceTempView(table)
+        # re-register whatever the version: the views' schema changed
+        self._view_versions.pop(pipe.module_hash, None)
+        self._sync_views(pipe)
         return info
 
     def _route_explain(self, query: str):
@@ -702,16 +712,6 @@ class Engine:
             raise ValueError("no ingest pipeline active; call ingest()/pipeline() first")
         return pipe.state
 
-    def _refresh_view(self, name: str, module_hash: str = "default") -> None:
-        """Re-register the SQL temp view over the CURRENT manifest —
-        views are snapshots of the plan at registration time, so any
-        storage mutation must refresh them or SQL reads stale files."""
-        pipe = self._pipelines.get(module_hash) or next(
-            iter(self._pipelines.values()), None
-        )
-        if pipe is not None and name in pipe.catalog.tables:
-            pipe.table(name).createOrReplaceTempView(name)
-
     def optimize(
         self,
         name: str,
@@ -721,16 +721,12 @@ class Engine:
         """``OPTIMIZE TABLE <name> FINAL``: compact each pk-bucket of
         the sunk table to one pk-sorted file.  ``zorder=[c1, c2]``
         clusters by the Morton key instead (OPTIMIZE ZORDER parity)."""
-        out = self._state(module_hash).optimize(name, zorder=zorder)
-        self._refresh_view(name, module_hash)
-        return out
+        return self._state(module_hash).optimize(name, zorder=zorder)
 
     def apply_ttl(self, name: str, expire_predicate: str, module_hash: str = "default") -> int:
         """ClickHouse TTL mutation: delete rows matching the expiry
         predicate; only buckets holding expired rows are rewritten."""
-        out = self._state(module_hash).apply_ttl(name, expire_predicate)
-        self._refresh_view(name, module_hash)
-        return out
+        return self._state(module_hash).apply_ttl(name, expire_predicate)
 
     def apply_update(
         self,
@@ -741,16 +737,12 @@ class Engine:
     ) -> int:
         """``ALTER TABLE ... UPDATE col = expr WHERE pred`` mutation:
         rewrite matching rows in the affected buckets only."""
-        out = self._state(module_hash).apply_update(name, assignments, predicate)
-        self._refresh_view(name, module_hash)
-        return out
+        return self._state(module_hash).apply_update(name, assignments, predicate)
 
     def rebucket(self, name: str, new_n_buckets: int, module_hash: str = "default") -> dict | None:
         """Rescale a table's pk-bucket fan-out online (the epoch
         rewrite unit must grow with the table)."""
-        out = self._state(module_hash).rebucket(name, new_n_buckets)
-        self._refresh_view(name, module_hash)
-        return out
+        return self._state(module_hash).rebucket(name, new_n_buckets)
 
     def parts(self, name: str, module_hash: str = "default") -> DataFrame:
         """``system.parts``: per-bucket storage metadata (files, bytes,

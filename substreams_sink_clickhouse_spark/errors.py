@@ -5,7 +5,6 @@ Mirrors the application-level error surface of the reference:
 * unknown table in a change batch   -> /root/reference/sinker/sinker.go:138-145
 * duplicate CREATE for a pending pk -> /root/reference/db/ops.go:29-31
 * UPDATE after DELETE for a pk      -> /root/reference/db/ops.go:65-67
-* malformed cursors table           -> /root/reference/db/db.go:140-178
 """
 
 from __future__ import annotations
@@ -32,8 +31,8 @@ class MergeSemanticsError(EngineError):
     (duplicate insert / update-after-delete)."""
 
 
-class CursorTableError(EngineError):
-    """The cursors table does not have the required shape."""
+class ManifestFormatError(EngineError):
+    """The warehouse manifest was written in an older format."""
 
 
 class DSNError(EngineError):

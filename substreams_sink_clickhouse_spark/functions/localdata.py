@@ -16,8 +16,7 @@ workers and zero Arrow machinery.  Values must be expressible as
 column literals (scalars, datetimes, arrays of scalars); anything
 exotic falls back to Arrow, then to the plain path.  Column TYPES
 follow the given schema exactly; nullability is relaxed to nullable
-(nothing in the engine — including ``validate_cursors_schema`` —
-compares nullability).
+(nothing in the engine compares nullability).
 """
 
 from __future__ import annotations

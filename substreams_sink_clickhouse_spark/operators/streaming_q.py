@@ -529,7 +529,7 @@ def _q185_asof_state(spark: SparkSession, sf: str) -> DataFrame:
     committed as delta+deletion-vector sidecars, a second status wave
     at block 4).  The query asks for
     the state as of BLOCK 1, which the engine resolves through the
-    cursor's block-per-epoch provenance (reference analog
+    block each snapshot records (reference analog
     db/cursor.go:120-125) to the pre-mutation snapshot — so the oracle
     is the ORIGINAL orders projection with no +50 updates and no
     deletes; if time travel silently returned the current state, every
@@ -539,14 +539,13 @@ def _q185_asof_state(spark: SparkSession, sf: str) -> DataFrame:
     bucketed parquet scan as the live table — no extra shuffle; the
     historical bucket map is carried by reference, never copied."""
     eng, pipe = _dv_replay_fixture(spark, sf)
-    # builder guard: block 1 must resolve to an epoch STRICTLY BEFORE
-    # the mutation epoch — i.e. time travel has real history to read
-    manifest = pipe.state.read_manifest()
-    resolved = pipe.state.epoch_for_block(1)
-    if resolved >= manifest["tables"]["orders_t"]["epoch"]:
+    # guard: the live snapshot must reflect a block PAST 1, so block 1
+    # resolves to an older snapshot — time travel has real history
+    head = pipe.state.read_manifest()["tables"]["orders_t"]["block_num"]
+    if head <= 1:
         raise AssertionError(
-            f"block 1 resolved to the CURRENT epoch {resolved}; "
-            "snapshot history did not engage"
+            f"the current snapshot reflects block {head}, so block 1 "
+            "resolves to it; snapshot history did not engage"
         )
     return eng.sql(
         "SELECT id, status, price FROM orders_t FOR SYSTEM_TIME AS OF 1"
@@ -1154,7 +1153,7 @@ def _q182_scd2_from_versions(spark: SparkSession, sf: str) -> DataFrame:
     few dozen rows."""
     _, pipe = _dv_replay_fixture(spark, sf)
     entry = pipe.state.read_manifest()["tables"]["orders_t"]
-    eps = sorted({h["epoch"] for h in entry.get("history", [])} | {entry["epoch"]})
+    eps = sorted({h["version"] for h in entry["history"]} | {entry["version"]})
     if len(eps) != 3:
         raise AssertionError(
             f"expected 3 committed epochs in version history, got {eps}"

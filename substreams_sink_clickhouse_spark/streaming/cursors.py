@@ -7,7 +7,9 @@ db/flush.go:52-58).  Here the cursor rides in the same atomic
 ``manifest.json`` replace that commits an epoch's table state
 (``TableStateStore.commit_epoch``): the manifest's ``cursors`` map,
 keyed by module hash, is the one commit point for rows and stream
-position, so no crash can leave the cursor ahead of the tables.
+position, so no crash can leave the cursor ahead of the tables.  Each
+entry also records the module's last committed ``epoch``: replay
+idempotency is per module, keyed by the query's own epoch id.
 Structured Streaming's checkpoint gives restart offsets, while the
 cursor gives the *queryable* stream position and the module-hash
 mismatch policy.
@@ -55,8 +57,8 @@ class CursorStore:
     def all_cursors(self) -> dict[str, Cursor]:
         """GetAllCursors (db/cursor.go:26-46)."""
         return {
-            mh: Cursor(mh, **c)
-            for mh, c in self.state.read_manifest().get("cursors", {}).items()
+            mh: Cursor(mh, c["cursor"], c["block_num"], c["block_id"])
+            for mh, c in self.state.read_manifest()["cursors"].items()
         }
 
     def get_cursor(self, module_hash: str, on_mismatch: str = "error") -> Cursor | None:
@@ -83,12 +85,17 @@ class CursorStore:
 
     def write_cursor(self, cursor: Cursor) -> None:
         """Upsert one cursor outside an epoch commit
-        (InsertCursor/UpdateCursor, db/cursor.go:104-125); epoch commits
-        record theirs inside ``commit_epoch``."""
-        self.state.update_cursors(lambda cursors: cursors.update({cursor.id: cursor.entry()}))
+        (InsertCursor/UpdateCursor, db/cursor.go:104-125), keeping the
+        module's epoch; epoch commits record theirs inside
+        ``commit_epoch``."""
+        self.state.update_cursors(
+            lambda cursors: cursors.setdefault(cursor.id, {}).update(cursor.entry())
+        )
 
     def delete_cursor(self, module_hash: str) -> None:
-        """DeleteCursor (db/cursor.go:127-135)."""
+        """DeleteCursor (db/cursor.go:127-135).  The module's committed
+        epoch goes with it: its stream restarts from a fresh
+        checkpoint, as the reference restarts from the start block."""
         self.state.update_cursors(lambda cursors: cursors.pop(module_hash, None))
 
     def delete_all(self) -> None:

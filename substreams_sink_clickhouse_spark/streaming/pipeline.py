@@ -6,15 +6,17 @@ table state + cursor.  The reference's single DB transaction per
 flush (/root/reference/db/flush.go:12-69) has no parquet analog, so
 effectively-once is achieved the way Spark sinks do it:
 
-* every micro-batch (epoch) writes each affected table's NEW state to
-  a fresh versioned directory ``<warehouse>/<table>/v<epoch>``;
-* a tiny JSON manifest is then swapped atomically (``os.replace``) to
-  point readers at the new versions and record the applied epoch and
-  the cursor — the ONE commit point of an epoch;
-* on restart/replay of an epoch the manifest shows it already applied
-  and the batch becomes a no-op (idempotent replay over the
-  at-least-once file source — same net semantics as the reference's
-  transactional cursor).
+* a tiny JSON manifest counts its replaces in ``version``, the only
+  name a commit has: a commit that reads version N writes each
+  affected table's NEW state to fresh ``<table>/v<N>`` (and ``dv<N>``)
+  directories;
+* the manifest is then swapped atomically (``os.replace``) to point
+  readers at them, record the block each table reflects and move the
+  module's cursor to this epoch — the ONE commit point of an epoch;
+* on restart/replay of an epoch the module's cursor shows it already
+  applied and the batch becomes a no-op (idempotent replay over the
+  at-least-once file source, keyed by the query's own epoch id —
+  same net semantics as the reference's transactional cursor).
 
 Flush cadence (O9): the reference flushes every 1000 blocks during
 catch-up and every block when live (sinker/sinker.go:19-22,180-194).
@@ -48,7 +50,7 @@ from substreams_sink_clickhouse_spark.operators.merge import (
     guard_merge_errors,
     reduce_changes,
 )
-from substreams_sink_clickhouse_spark.errors import UnknownTableError
+from substreams_sink_clickhouse_spark.errors import ManifestFormatError, UnknownTableError
 from substreams_sink_clickhouse_spark.sinks.clickhouse import cursor_update_statement
 from substreams_sink_clickhouse_spark.streaming.cursors import Cursor, CursorStore
 
@@ -132,10 +134,12 @@ class TableStateStore:
     as file-level rewrite + snapshot manifest; we keep it explicit and
     dependency-free.)
 
-    ``history`` holds full bucket-map snapshots with their modulus, so
-    reorg rollback (a manifest edit) and vacuum (drop unreferenced
-    bucket dirs) work unchanged on the bucketed layout.  Only this
-    class writes the manifest.
+    ``history`` holds full bucket-map snapshots with their modulus,
+    commit version and the block they reflect, so reorg rollback (a
+    manifest edit), time travel and vacuum (drop unreferenced bucket
+    dirs) work unchanged on the bucketed layout.  Only this class
+    writes the manifest, and only ``_write_manifest`` moves its
+    ``version``.
 
     Round 5 adds DELETION-VECTOR commits (Delta/Iceberg
     merge-on-read, dependency-free): a bucket value may be a layered
@@ -199,14 +203,21 @@ class TableStateStore:
 
     def read_manifest(self) -> dict:
         if not os.path.exists(self._manifest_path):
-            return {"tables": {}, "applied_epochs": []}
+            return {"version": 0, "tables": {}, "cursors": {}}
         with open(self._manifest_path, encoding="utf-8") as fh:
-            return json.load(fh)
+            manifest = json.load(fh)
+        if "version" not in manifest:
+            raise ManifestFormatError(
+                f"{self._manifest_path} predates versioned manifests; "
+                "re-ingest this warehouse (see MIGRATION.md)"
+            )
+        return manifest
 
     def _write_manifest(self, manifest: dict) -> None:
+        """Replace the manifest atomically as the next version."""
         fd, tmp = tempfile.mkstemp(dir=self.warehouse_dir, suffix=".manifest")
         with os.fdopen(fd, "w", encoding="utf-8") as fh:
-            json.dump(manifest, fh)
+            json.dump({**manifest, "version": manifest["version"] + 1}, fh)
         os.replace(tmp, self._manifest_path)  # atomic on POSIX
 
     # ------------------------------------------ bucket-entry helpers
@@ -214,12 +225,12 @@ class TableStateStore:
     # A manifest bucket value is either
     #   * a PATH string — one current data dir, no sidecars (what a
     #     full-rewrite commit writes; the only form before round 5), or
-    #   * a dict {"files": [{"epoch": e, "path": p}, ...],
-    #             "dv": path-or-None, "masked": int}
-    #     — merge-on-READ layers: base + per-epoch delta files plus ONE
+    #   * a dict {"files": [{"version": v, "path": p}, ...],
+    #             "dv": path-or-None}
+    #     — merge-on-READ layers: base + per-commit delta files plus ONE
     #     current deletion-vector parquet of (src, pk) rows naming the
-    #     superseded physical rows (src = the epoch tag of the file
-    #     holding the dead row; legacy base files are tagged -1).
+    #     superseded physical rows (src = the version tag of the file
+    #     holding the dead row; plain-path base files are tagged -1).
     #     A reader subtracts the dv with an anti-join; OPTIMIZE (or the
     #     next full-rewrite commit) compacts the entry back to a plain
     #     path.
@@ -230,7 +241,7 @@ class TableStateStore:
         if val is None:
             return []
         if isinstance(val, str):
-            return [{"epoch": -1, "path": val}]
+            return [{"version": -1, "path": val}]
         return list(val.get("files", []))
 
     @staticmethod
@@ -241,30 +252,30 @@ class TableStateStore:
         self, info, bmap: dict, keys: list[str], with_src: bool = False
     ) -> DataFrame:
         """Visible rows of the given bucket entries: union the data
-        layers (grouped by epoch tag — one parquet read per layer
+        layers (grouped by version tag — one parquet read per layer
         generation, each a parallel multi-path scan), then anti-join
         away deletion-vector rows on (src, pk).  ``with_src`` keeps the
-        ``__src`` epoch-tag column (the sidecar apply path needs it to
-        name the superseded physical rows)."""
+        ``__src`` version-tag column (the sidecar apply path needs it
+        to name the superseded physical rows)."""
         entries = [bmap.get(k) for k in keys]
         dv_paths = [p for e in entries if (p := self._entry_dv(e))]
-        by_epoch: dict[int, list[str]] = {}
+        by_version: dict[int, list[str]] = {}
         for e in entries:
             for layer in self._entry_layers(e):
-                by_epoch.setdefault(int(layer["epoch"]), []).append(layer["path"])
-        if not by_epoch:
+                by_version.setdefault(int(layer["version"]), []).append(layer["path"])
+        if not by_version:
             df = empty_df(self.spark, info.schema)
             return df.selectExpr("*", "CAST(NULL AS LONG) AS __src") if with_src else df
         if not dv_paths and not with_src:
             # fast path — identical to the pre-deletion-vector reader:
             # one multi-path scan, no tagging, no join
-            all_paths = [p for ps in by_epoch.values() for p in ps]
+            all_paths = [p for ps in by_version.values() for p in ps]
             return self.spark.read.schema(info.schema).parquet(*all_paths)
         parts = [
             self.spark.read.schema(info.schema)
             .parquet(*paths)
-            .selectExpr("*", f"CAST({epoch} AS LONG) AS __src")
-            for epoch, paths in sorted(by_epoch.items())
+            .selectExpr("*", f"CAST({version} AS LONG) AS __src")
+            for version, paths in sorted(by_version.items())
         ]
         df = parts[0]
         for p in parts[1:]:
@@ -314,45 +325,45 @@ class TableStateStore:
         keys = [str(b) for b in buckets] if buckets is not None else list(bmap)
         return self._read_bmap_subset(info, bmap, keys, with_src=with_src)
 
-    def table_state_as_of(self, name: str, epoch_id: int) -> DataFrame:
-        """Time travel: the table's state as of a committed epoch —
-        free with snapshot history (subject to vacuum retention).
-        Raises if no snapshot at or below ``epoch_id`` survives."""
+    @staticmethod
+    def _snapshots(entry: dict) -> list[dict]:
+        """A table's retained snapshots, oldest first; the live entry
+        (without its history) is the last."""
+        return entry["history"] + [{k: v for k, v in entry.items() if k != "history"}]
+
+    def table_state_as_of(
+        self, name: str, version: int | None = None, block: int | None = None
+    ) -> DataFrame:
+        """Time travel: the table's newest retained snapshot committed
+        at manifest ``version`` or earlier, or reflecting stream
+        ``block`` or earlier (each snapshot records the block its commit
+        reflects — reference analog db/cursor.go:120-125).
+        Granularity is the flush epoch, as in the reference: a block
+        inside a multi-block flush window resolves to the last state
+        that does not read past it.  Free with snapshot history
+        (subject to vacuum retention); raises if no such snapshot
+        survives."""
         info = self.catalog.get(name)
         entry = self.read_manifest()["tables"].get(name)
         if entry is None:
             return empty_df(self.spark, info.schema)
-        candidates = [h for h in entry.get("history", []) if h["epoch"] <= epoch_id]
-        if entry["epoch"] <= epoch_id:
-            bmap = entry["buckets"]
-        elif candidates:
-            bmap = max(candidates, key=lambda h: h["epoch"])["buckets"]
-        else:
+        key, n = ("version", version) if block is None else ("block_num", block)
+        snaps = [h for h in self._snapshots(entry) if h[key] <= n]
+        if not snaps:
+            unit = "version" if block is None else "block"
             raise ValueError(
-                f"no retained snapshot of '{name}' at or below epoch "
-                f"{epoch_id} (vacuumed?)"
+                f"no committed epoch of '{name}' at or below {unit} {n} "
+                "is retained (vacuumed?)"
             )
+        bmap = snaps[-1]["buckets"]
         return self._read_bmap_subset(info, bmap, list(bmap))
 
-    def epoch_for_block(self, block_num: int) -> int:
-        """Resolve a BLOCK number to the committed epoch visible at it:
-        the highest epoch whose cursor block is <= ``block_num`` (the
-        cursor records each flush's highest applied block — reference
-        analog db/cursor.go:120-125, cursor-at-block provenance).
-        Granularity is the flush epoch, exactly as in the reference: a
-        block inside a multi-block flush window resolves to the last
-        state that does not read past it."""
-        blocks = self.read_manifest().get("epoch_blocks", {})
-        cands = [int(e) for e, b in blocks.items() if b <= block_num]
-        if not cands:
-            raise ValueError(
-                f"no committed epoch at or below block {block_num} "
-                f"(recorded epoch blocks: {sorted(blocks.items())})"
-            )
-        return max(cands)
-
-    def epoch_applied(self, epoch_id: int) -> bool:
-        return epoch_id in self.read_manifest()["applied_epochs"]
+    def epoch_applied(self, module_hash: str, epoch_id: int) -> bool:
+        """True when ``module_hash``'s stream already committed
+        ``epoch_id``: its cursor records the last epoch it committed,
+        and a stream's epoch ids only move forward."""
+        cursor = self.read_manifest()["cursors"].get(module_hash, {})
+        return epoch_id <= cursor.get("epoch", -1)
 
     def commit_epoch(
         self,
@@ -361,9 +372,10 @@ class TableStateStore:
         cursor: Cursor | None,
         sidecar_states: dict[str, tuple[DataFrame, DataFrame, list[int]]] | None = None,
     ) -> None:
-        """Write each affected bucket's new state, then swap the
-        manifest, which records the tables, the applied epoch and the
-        cursor in one atomic replace.  ``new_states`` maps table ->
+        """Write each affected bucket's new state under the version
+        this commit reads, then swap the manifest, which records the
+        tables, the block they now reflect and the cursor with its
+        epoch in one atomic replace.  ``new_states`` maps table ->
         (bucket-subset state DF, affected bucket ids) — the
         full-rewrite path.  ``sidecar_states`` maps table -> (delta
         rows DF, (src, pk) mask DF, affected bucket ids) — the
@@ -375,14 +387,15 @@ class TableStateStore:
         and the commit point either way; untouched buckets are carried
         forward by reference, never rewritten."""
         manifest = self.read_manifest()
-        tables = manifest["tables"]
+        version, tables = manifest["version"], manifest["tables"]
+        block = (cursor.block_num, cursor.block_id) if cursor else (-1, "")
         for name, (delta, mask, affected) in (sidecar_states or {}).items():
             n_b = self.table_n_buckets(name)
             bmap = dict(tables[name]["buckets"]) if name in tables else {}
             table_dir = os.path.join(self.warehouse_dir, name)
             deltas = self._write_buckets(
                 delta, self.catalog.get(name).primary_key, n_b,
-                os.path.join(table_dir, f"v{epoch_id}"), len(affected),
+                os.path.join(table_dir, f"v{version}"), len(affected),
             )
             # ONE current dv per bucket: new masks ∪ its existing dv rows
             old_dv_paths = [
@@ -393,30 +406,28 @@ class TableStateStore:
                     self.spark.read.schema("src LONG, pk STRING").parquet(*old_dv_paths)
                 )
             dvs = self._write_buckets(
-                mask, "pk", n_b, os.path.join(table_dir, f"dv{epoch_id}"), len(affected)
+                mask, "pk", n_b, os.path.join(table_dir, f"dv{version}"), len(affected)
             )
             for b in affected:
                 old = bmap.get(str(b))
                 layers = self._entry_layers(old)
                 if b in deltas:
-                    layers = layers + [{"epoch": epoch_id, "path": deltas[b]}]
+                    layers = layers + [{"version": version, "path": deltas[b]}]
                 dv_path = dvs.get(b, self._entry_dv(old))
                 bmap[str(b)] = {"files": layers, "dv": dv_path} if layers or dv_path else None
-            self._install(manifest, name, epoch_id, bmap, n_b)
+            self._install(manifest, name, bmap, n_b, block)
         for name, (df, affected) in new_states.items():
             n_b = self.table_n_buckets(name)
             written = self._write_buckets(
                 df, self.catalog.get(name).primary_key, n_b,
-                os.path.join(self.warehouse_dir, name, f"v{epoch_id}"), len(affected),
+                os.path.join(self.warehouse_dir, name, f"v{version}"), len(affected),
             )
             bmap = dict(tables[name]["buckets"]) if name in tables else {}
             # a bucket whose rows were all deleted writes no dir
             bmap.update({str(b): written.get(b) for b in affected})
-            self._install(manifest, name, epoch_id, bmap, n_b)
-        manifest["applied_epochs"] = sorted(set(manifest["applied_epochs"]) | {epoch_id})
+            self._install(manifest, name, bmap, n_b, block)
         if cursor is not None:
-            manifest.setdefault("epoch_blocks", {})[str(epoch_id)] = cursor.block_num
-            manifest.setdefault("cursors", {})[cursor.id] = cursor.entry()
+            manifest["cursors"][cursor.id] = {**cursor.entry(), "epoch": epoch_id}
         self._write_manifest(manifest)
 
     def _write_buckets(
@@ -441,20 +452,16 @@ class TableStateStore:
             if d.startswith("__b=")
         }
 
-    @staticmethod
-    def _install(manifest: dict, name: str, epoch: int, bmap: dict, n_b: int) -> None:
+    def _install(self, manifest: dict, name: str, bmap: dict, n_b: int, block: tuple) -> None:
         """Make ``bmap`` the table's live bucket map under modulus
-        ``n_b``, snapshotting the prior entry (epoch, bucket map,
-        modulus) into its history for rollback, time travel and
-        vacuum."""
+        ``n_b``, tagged with the version the commit read and the block
+        it reflects, snapshotting the prior entry into its history for
+        rollback, time travel and vacuum."""
         prior = manifest["tables"].get(name)
-        history = []
-        if prior is not None:
-            history = prior.get("history", []) + [
-                {k: v for k, v in prior.items() if k != "history"}
-            ]
         manifest["tables"][name] = {
-            "epoch": epoch, "buckets": bmap, "history": history, "n_buckets": n_b,
+            "version": manifest["version"], "block_num": block[0], "block_id": block[1],
+            "buckets": bmap, "history": self._snapshots(prior) if prior else [],
+            "n_buckets": n_b,
         }
 
     def sidecar_ready(self, name: str, buckets: list[int]) -> bool:
@@ -477,44 +484,38 @@ class TableStateStore:
         """Apply ``edit`` to the manifest's ``cursors`` map and commit
         it: cursor maintenance outside an epoch commit."""
         manifest = self.read_manifest()
-        edit(manifest.setdefault("cursors", {}))
+        edit(manifest["cursors"])
         self._write_manifest(manifest)
 
     def rollback_to_block(self, last_valid_block: int) -> None:
-        """Reorg rollback, one manifest write: every table returns to
-        its newest snapshot at or below the newest epoch whose cursor
-        block is <= ``last_valid_block``; later epochs leave
-        ``applied_epochs`` and ``epoch_blocks``, and cursors past that
-        epoch's block rewind to it (with an empty ``block_id``: the
-        manifest records each epoch's block number, not its id)."""
+        """Reorg rollback, one manifest write: every table past
+        ``last_valid_block`` returns to its newest snapshot at or below
+        it (a table with none is dropped), and cursors past the newest
+        surviving snapshot rewind to its block number and id.  A
+        cursor's epoch stays: the stream's epochs only move forward,
+        and a replay of a rolled-back epoch must not re-apply it."""
         manifest = self.read_manifest()
-        blocks = manifest.get("epoch_blocks", {})
-        valid = [int(e) for e, b in blocks.items() if b <= last_valid_block]
-        if not valid:
+        heads = []
+        for name, entry in list(manifest["tables"].items()):
+            if entry["block_num"] > last_valid_block:
+                kept = [h for h in entry["history"] if h["block_num"] <= last_valid_block]
+                if not kept:
+                    del manifest["tables"][name]
+                    continue
+                entry = manifest["tables"][name] = {**kept[-1], "history": kept[:-1]}
+            heads.append(entry)
+        if not heads:
             raise RuntimeError(
-                f"no committed epoch at or below block {last_valid_block}; "
+                f"no committed snapshot at or below block {last_valid_block}; "
                 "re-sync from genesis (reference behavior: error out, "
                 "sinker.go:176-178)"
             )
-        target = max(valid)
-        for name, entry in list(manifest["tables"].items()):
-            if entry["epoch"] <= target:
-                continue  # already at or before the fork point
-            kept = [h for h in entry.get("history", []) if h["epoch"] <= target]
-            if kept:
-                # reversed: of equal-epoch snapshots (maintenance keeps
-                # the epoch) the latest wins
-                newest = max(reversed(kept), key=lambda h: h["epoch"])
-                manifest["tables"][name] = {**newest, "history": kept}
-            else:
-                del manifest["tables"][name]
-        manifest["applied_epochs"] = [e for e in manifest["applied_epochs"] if e <= target]
-        manifest["epoch_blocks"] = {e: b for e, b in blocks.items() if int(e) <= target}
-        head = blocks[str(target)]
-        cursors = manifest.get("cursors", {})
-        for mh, c in cursors.items():
-            if c["block_num"] > head:
-                cursors[mh] = Cursor.for_epoch(mh, target, head, "").entry()
+        head = max(heads, key=lambda h: h["block_num"])
+        for mh, c in manifest["cursors"].items():
+            if c["block_num"] > head["block_num"]:
+                c.update(Cursor.for_epoch(
+                    mh, c.get("epoch", -1), head["block_num"], head["block_id"]
+                ).entry())
         self._write_manifest(manifest)
 
     def vacuum(self, keep_epochs: int = 2) -> list[str]:
@@ -543,12 +544,7 @@ class TableStateStore:
             return refs
 
         for name, entry in manifest["tables"].items():
-            history = entry.get("history", [])
-            keep = (
-                sorted(history, key=lambda h: h["epoch"])[-keep_epochs:]
-                if keep_epochs
-                else []
-            )
+            keep = entry["history"][-keep_epochs:] if keep_epochs else []
             referenced = _bmap_paths(entry["buckets"])
             for snap in keep:
                 referenced |= _bmap_paths(snap["buckets"])
@@ -556,7 +552,7 @@ class TableStateStore:
             if os.path.isdir(table_dir):
                 for vname in sorted(os.listdir(table_dir)):
                     vdir = os.path.join(table_dir, vname)
-                    # data versions (v*) AND deletion-vector versions (dv*)
+                    # every commit writes v<N> and, with sidecars, dv<N>
                     if not (
                         (vname.startswith("v") or vname.startswith("dv"))
                         and os.path.isdir(vdir)
@@ -585,30 +581,29 @@ class TableStateStore:
         name: str,
         df: DataFrame,
         affected: list[int],
-        kind: str,
         sort=None,
         new_n_buckets: int | None = None,
     ) -> None:
         """Shared commit path for non-epoch mutations (OPTIMIZE / TTL /
-        REBUCKET): write the affected buckets' new state under
-        ``<table>/<kind><seq>``, snapshot the prior bucket map to
-        history, swap the manifest atomically.  ``applied_epochs`` is
-        untouched — mutations are storage maintenance, not stream
-        progress, so epoch replay/idempotency semantics are unaffected.
-        With ``new_n_buckets`` the bucket map is REPLACED under the new
-        modulus (``affected`` then lists the new bucket ids)."""
+        UPDATE / REBUCKET): write the affected buckets' new state under
+        ``<table>/v<N>`` like any commit, snapshot the prior bucket map
+        to history, swap the manifest atomically.  Cursors and the
+        table's block are untouched — mutations are storage
+        maintenance, not stream progress, so epoch replay/idempotency
+        semantics are unaffected.  With ``new_n_buckets`` the bucket
+        map is REPLACED under the new modulus (``affected`` then lists
+        the new bucket ids)."""
         manifest = self.read_manifest()
-        seq = int(manifest.get("mutation_seq", 0)) + 1
-        manifest["mutation_seq"] = seq
         n_b = new_n_buckets or self.table_n_buckets(name)
         written = self._write_buckets(
             df, self.catalog.get(name).primary_key, n_b,
-            os.path.join(self.warehouse_dir, name, f"{kind}{seq}"), len(affected), sort,
+            os.path.join(self.warehouse_dir, name, f"v{manifest['version']}"),
+            len(affected), sort,
         )
         prior = manifest["tables"][name]
         bmap = {} if new_n_buckets else dict(prior["buckets"])
         bmap.update({str(b): written.get(b) for b in affected})
-        self._install(manifest, name, prior["epoch"], bmap, n_b)
+        self._install(manifest, name, bmap, n_b, (prior["block_num"], prior["block_id"]))
         self._write_manifest(manifest)
 
     def optimize(
@@ -687,7 +682,7 @@ class TableStateStore:
             from substreams_sink_clickhouse_spark.functions.zorder import zorder_key
 
             sort = zorder_key(state, zorder)
-        self._commit_maintenance(name, state, affected, "opt", sort=sort)
+        self._commit_maintenance(name, state, affected, sort=sort)
         after = sum(p["n_files"] for p in self.parts(name))
         return {"files_before": before, "files_after": after}
 
@@ -722,7 +717,7 @@ class TableStateStore:
         affected = [int(r["__b"]) for r in per_bucket]
         n_expired = sum(int(r["n_exp"]) for r in per_bucket)
         kept = self.bucket_state(name, affected).filter(f"NOT ({expire_predicate})")
-        self._commit_maintenance(name, kept, affected, "ttl")
+        self._commit_maintenance(name, kept, affected)
         return n_expired
 
     def apply_update(
@@ -775,7 +770,7 @@ class TableStateStore:
                 )
             ]
         )
-        self._commit_maintenance(name, mutated, affected, "upd")
+        self._commit_maintenance(name, mutated, affected)
         return n_hit
 
     def rebucket(self, name: str, new_n_buckets: int) -> dict | None:
@@ -802,7 +797,6 @@ class TableStateStore:
             name,
             self.table_state(name),
             list(range(new_n_buckets)),
-            "rbk",
             sort=self.catalog.get(name).primary_key,
             new_n_buckets=new_n_buckets,
         )
@@ -947,7 +941,7 @@ class ChangesIngestPipeline:
             phases[phase] = phases.get(phase, 0.0) + (now - since)
             return now
 
-        if self.state.epoch_applied(epoch_id):
+        if self.state.epoch_applied(self.module_hash, epoch_id):
             return  # replay after restart: already committed
         if self.start_block is not None:
             changes = changes.filter(F.col("block_num") >= self.start_block)
@@ -1113,7 +1107,7 @@ class ChangesIngestPipeline:
         on_error = self.on_decode_error
         if self.dead_letter_dir:
             on_error = "drop"
-            if not self.state.epoch_applied(epoch_id):
+            if not self.state.epoch_applied(self.module_hash, epoch_id):
                 (
                     malformed_changes(raw, "value")
                     .write.mode("overwrite")
@@ -1298,10 +1292,11 @@ class ChangesIngestPipeline:
         The reference stubs this out entirely — its handler returns an
         error and relies on the upstream ``--undo-buffer-size`` to only
         deliver final blocks (/root/reference/sinker/sinker.go:176-178).
-        Our versioned table state can do better: every committed epoch
-        retains its predecessor's directories, so rolling back to the
-        newest epoch at-or-below the fork point is a manifest edit
+        Our versioned table state can do better: every commit retains
+        its predecessor's directories and each snapshot records the
+        block it reflects, so rolling back to the newest snapshot
+        at-or-below the fork point is a manifest edit
         (``TableStateStore.rollback_to_block``) that also rewinds the
-        cursor.
+        cursor to that snapshot's block number and id.
         """
         self.state.rollback_to_block(last_valid_block)

@@ -1,38 +1,10 @@
-"""Catalog + cursors-table validation tests (O12/O13/O14)."""
+"""Catalog validation tests (O12/O14)."""
 
 import pytest
 from pyspark.sql import types as T
 
-from substreams_sink_clickhouse_spark.catalog import (
-    CURSORS_SCHEMA,
-    Catalog,
-    TableInfo,
-    validate_cursors_schema,
-)
-from substreams_sink_clickhouse_spark.errors import CursorTableError, UnknownTableError
-
-
-def test_cursors_schema_exact_shape_ok():
-    validate_cursors_schema(CURSORS_SCHEMA)
-
-
-def test_cursors_schema_wrong_type_rejected():
-    bad = T.StructType(
-        [
-            T.StructField("id", T.StringType(), False),
-            T.StructField("cursor", T.StringType(), True),
-            T.StructField("block_num", T.IntegerType(), True),  # must be long
-            T.StructField("block_id", T.StringType(), True),
-        ]
-    )
-    with pytest.raises(CursorTableError):
-        validate_cursors_schema(bad)
-
-
-def test_cursors_schema_missing_column_rejected():
-    bad = T.StructType([T.StructField("id", T.StringType(), False)])
-    with pytest.raises(CursorTableError):
-        validate_cursors_schema(bad)
+from substreams_sink_clickhouse_spark.catalog import Catalog, TableInfo
+from substreams_sink_clickhouse_spark.errors import UnknownTableError
 
 
 def test_catalog_unknown_table():

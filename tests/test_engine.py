@@ -135,7 +135,12 @@ def test_undo_rolls_back_to_fork_point(spark, tmp_path):
     }
     # the cursor rewinds with the tables, so a restart resumes at the fork
     assert eng.cursor().block_num == 2
-    assert pipe.state.read_manifest()["epoch_blocks"] == {"0": 2}
+    # only snapshots at or below the fork block survive; the stream's
+    # epoch stays, so a replay of the orphaned epoch 1 stays a no-op
+    manifest = pipe.state.read_manifest()
+    entry = manifest["tables"]["block_meta"]
+    assert [h["block_num"] for h in entry["history"]] + [entry["block_num"]] == [2]
+    assert manifest["cursors"]["default"]["epoch"] == 1
 
 
 def test_undo_below_history_errors(spark, tmp_path):
@@ -312,7 +317,7 @@ def test_query_cache_invalidates_on_external_table_change(spark, tmp_path):
 
 def test_asof_sql_and_block_resolution(spark, tmp_path):
     """Engine.sql FOR SYSTEM_TIME AS OF: block-number resolution via
-    cursor provenance (default unit), EPOCH unit, table_as_of arg
+    cursor provenance (default unit), VERSION unit, table_as_of arg
     validation, and the pre-history error."""
     import pytest
 
@@ -346,7 +351,7 @@ def test_asof_sql_and_block_resolution(spark, tmp_path):
         assert got == {"k1": want}, (blk, got)
     # explicit units
     assert vals(eng.sql(
-        "SELECT id, number FROM block_meta FOR SYSTEM_TIME AS OF EPOCH 0"
+        "SELECT id, number FROM block_meta FOR SYSTEM_TIME AS OF VERSION 0"
     )) == {"k1": 1}
     assert vals(eng.sql(
         "SELECT id, number FROM block_meta FOR SYSTEM_TIME AS OF BLOCK 9"
@@ -356,7 +361,7 @@ def test_asof_sql_and_block_resolution(spark, tmp_path):
     with pytest.raises(ValueError, match="exactly one"):
         eng.table_as_of("block_meta")
     with pytest.raises(ValueError, match="exactly one"):
-        eng.table_as_of("block_meta", epoch=0, block=5)
+        eng.table_as_of("block_meta", version=0, block=5)
     with pytest.raises(ValueError, match="unknown sunk table"):
         eng.table_as_of("nope", block=5)
     # a block before the first commit has no snapshot to serve
@@ -423,3 +428,99 @@ def test_explain_statement_parity(spark, tmp_path):
     )
     text = "\n".join(r["explain"] for r in syn.collect())
     assert "__asof_rn" in text and "__asof_w" not in text, text
+
+
+def test_undo_cursor_carries_fork_block_id(spark, tmp_path):
+    """A reorg rollback rewinds the cursor to the surviving snapshot's
+    block number AND id, both recorded with the snapshot."""
+    stream = tmp_path / "changes"
+    stream.mkdir()
+    eng = Engine(
+        spark,
+        EngineConfig(
+            warehouse_dir=str(tmp_path / "wh"), checkpoint_dir=str(tmp_path / "ckpt")
+        ),
+    )
+    cat = _catalog()
+    for block in (4, 7):
+        (stream / f"b{block}.jsonl").write_text(
+            _msg(block, [("block_meta", "k1", 1, "CREATE" if block == 4 else "UPDATE",
+                          {"number": str(block)})])
+        )
+        pipe = eng.ingest(str(stream), cat)
+    assert (eng.cursor().block_num, eng.cursor().block_id) == (7, "0x0007")
+    pipe.handle_block_undo_signal(last_valid_block=5)
+    assert (eng.cursor().block_num, eng.cursor().block_id) == (4, "0x0004")
+    assert eng.table_as_of("block_meta", block=5).collect()[0]["number"] == 4
+
+
+def test_asof_block_ignores_maintenance_on_another_table(spark, tmp_path):
+    """A maintenance commit keeps its table's block, so a block read of
+    another table still resolves to that table's own snapshot at the
+    block, and a version read after the maintenance commit sees the
+    state at that version."""
+    stream = tmp_path / "changes"
+    stream.mkdir()
+    eng = Engine(
+        spark,
+        EngineConfig(
+            warehouse_dir=str(tmp_path / "wh"), checkpoint_dir=str(tmp_path / "ckpt")
+        ),
+    )
+    cat = _catalog()
+    cat.register(TableInfo("block_meta_x", BLOCK_META_SCHEMA, "id"))
+    (stream / "b1.jsonl").write_text(_msg(1, [
+        ("block_meta", "k1", 1, "CREATE", {"number": "1"}),
+        ("block_meta_x", "x1", 2, "CREATE", {"number": "1"}),
+    ]))
+    eng.ingest(str(stream), cat)
+    (stream / "b5.jsonl").write_text(
+        _msg(5, [("block_meta", "k1", 1, "UPDATE", {"number": "5"})])
+    )
+    pipe = eng.ingest(str(stream), cat)
+    eng.optimize("block_meta_x")
+
+    def vals(df):
+        return {r["id"]: r["number"] for r in df.collect()}
+
+    assert vals(eng.table_as_of("block_meta", block=3)) == {"k1": 1}
+    assert vals(eng.sql(
+        "SELECT id, number FROM block_meta FOR SYSTEM_TIME AS OF BLOCK 3"
+    )) == {"k1": 1}
+    assert vals(eng.table_as_of("block_meta", block=5)) == {"k1": 5}
+    assert vals(eng.table_as_of("block_meta_x", block=3)) == {"x1": 1}
+    opt_version = pipe.state.read_manifest()["tables"]["block_meta_x"]["version"]
+    assert opt_version == 2
+    assert vals(eng.sql(
+        f"SELECT id, number FROM block_meta FOR SYSTEM_TIME AS OF VERSION {opt_version}"
+    )) == {"k1": 5}
+    assert vals(eng.table_as_of("block_meta", version=0)) == {"k1": 1}
+
+
+def test_sql_reads_epochs_committed_after_ingest(spark, tmp_path):
+
+    """Engine.sql re-registers the sunk-table views once the manifest
+    version moves, so an epoch committed after ``ingest`` returned (or
+    a maintenance commit) is visible to SQL, not only to ``table``."""
+    stream = tmp_path / "changes"
+    stream.mkdir()
+    eng = Engine(
+        spark,
+        EngineConfig(
+            warehouse_dir=str(tmp_path / "wh"), checkpoint_dir=str(tmp_path / "ckpt")
+        ),
+    )
+    cat = _catalog()
+    (stream / "b1.jsonl").write_text(
+        _msg(1, [("block_meta", "k1", 1, "CREATE", {"number": "1"})])
+    )
+    pipe = eng.ingest(str(stream), cat)
+    (stream / "b2.jsonl").write_text(
+        _msg(2, [("block_meta", "k2", 1, "CREATE", {"number": "2"})])
+    )
+    pipe.run_to_completion(str(stream))
+    assert sorted(r["id"] for r in pipe.table("block_meta").collect()) == ["k1", "k2"]
+    q = "SELECT id FROM block_meta ORDER BY id"
+    assert [r["id"] for r in eng.sql(q).collect()] == ["k1", "k2"]
+    pipe.state.apply_ttl("block_meta", "id = 'k1'")
+    assert [r["id"] for r in eng.sql(q).collect()] == ["k2"]

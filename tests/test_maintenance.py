@@ -288,8 +288,6 @@ def test_optimize_zorder_narrows_file_ranges(spark, tmp_path):
     """After OPTIMIZE ZORDER BY (x, y), per-file min/max spread on the
     SECOND column must be materially narrower than a pk-only sort —
     the property parquet row-group skipping depends on."""
-    import glob
-
     from pyspark.sql import functions as F
 
     from substreams_sink_clickhouse_spark.catalog import Catalog, TableInfo
@@ -333,15 +331,15 @@ def test_optimize_zorder_narrows_file_ranges(spark, tmp_path):
             spreads.append(agg["s"])
         return sum(spreads) / len(spreads)
 
+    def live_bucket_dirs():
+        # the bucket dirs the optimize just committed
+        return list(store.read_manifest()["tables"]["pts"]["buckets"].values())
+
     store.optimize("pts")  # pk clustering
-    pk_files = glob.glob(str(tmp_path / "wh" / "pts" / "opt*" / "__b=*" ))
-    pk_spread = y_spread(pk_files)
+    pk_spread = y_spread(live_bucket_dirs())
 
     store.optimize("pts", zorder=["x", "y"])
-    z_files = glob.glob(str(tmp_path / "wh" / "pts" / "opt*" / "__b=*"))
-    # latest mutation dir only
-    z_latest = sorted(z_files)[-1:]
-    z_spread = y_spread(z_latest)
+    z_spread = y_spread(live_bucket_dirs())
     spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     # a z-clustered file covers a narrow band of y; a pk-clustered one
     # samples the full range
@@ -477,3 +475,34 @@ def test_truncate_table_statement(spark, tmp_path):
     assert st.n_deleted == 5
     assert eng.table("block_meta").count() == 0
     assert eng.sql("SELECT count(*) AS n FROM block_meta").collect()[0].n == 0
+
+
+def test_vacuum_reclaims_maintenance_commits(spark, tmp_path):
+    """Maintenance commits write ``v<N>`` directories like epochs do, so
+    ``vacuum(keep_epochs=0)`` after repeated OPTIMIZE leaves exactly the
+    bucket directories the live map references."""
+    eng, pipe = _engine_with_epochs(spark, tmp_path, n_epochs=2, keys_per_epoch=6)
+    before = {r["id"]: r["number"] for r in pipe.table("block_meta").collect()}
+    for _ in range(3):
+        pipe.state.optimize("block_meta")
+    pipe.state.vacuum(keep_epochs=0)
+    entry = pipe.state.read_manifest()["tables"]["block_meta"]
+    referenced = {
+        p
+        for v in entry["buckets"].values()
+        for p in [layer["path"] for layer in pipe.state._entry_layers(v)]
+        + [pipe.state._entry_dv(v)]
+        if p
+    }
+    table_dir = os.path.join(pipe.state.warehouse_dir, "block_meta")
+    on_disk = {
+        os.path.join(table_dir, vname, bname)
+        for vname in os.listdir(table_dir)
+        for bname in os.listdir(os.path.join(table_dir, vname))
+        if bname.startswith("__b=")
+    }
+    assert on_disk == referenced
+    assert set(os.listdir(table_dir)) == {
+        os.path.basename(os.path.dirname(p)) for p in referenced
+    }
+    assert {r["id"]: r["number"] for r in pipe.table("block_meta").collect()} == before

@@ -154,11 +154,27 @@ def test_cursor_store_roundtrip_and_mismatch(spark, tmp_path):
     assert store.get_cursor("h2", on_mismatch="ignore") is None
 
 
+def test_delete_cursor_forgets_the_module_epoch(spark, tmp_path):
+    """Deleting a cursor restarts its module from scratch: the epoch it
+    had committed goes too, so a fresh checkpoint's epoch 0 applies,
+    and another module's cursor and epoch are untouched."""
+    state = TableStateStore(spark, str(tmp_path / "wh"), Catalog())
+    state.commit_epoch(3, {}, Cursor.for_epoch("h1", 3, 10, "0xa"))
+    state.commit_epoch(0, {}, Cursor.for_epoch("h2", 0, 12, "0xb"))
+    store = CursorStore(state)
+    assert state.epoch_applied("h1", 0) and state.epoch_applied("h1", 3)
+    store.delete_cursor("h1")
+    assert not state.epoch_applied("h1", 0)
+    assert state.epoch_applied("h2", 0) and list(store.all_cursors()) == ["h2"]
+    store.delete_all()
+    assert not state.epoch_applied("h2", 0) and store.all_cursors() == {}
+
+
 def test_crash_at_manifest_swap_commits_nothing(
     spark, tmp_path, block_meta_catalog, changes_df, monkeypatch
 ):
     """The manifest replace is an epoch's only durable metadata write:
-    a crash there leaves the tables, the applied epochs and the cursor
+    a crash there leaves the tables, the cursor and its epoch
     unchanged, and replaying the epoch matches a run with no crash."""
     epochs = [
         [(1, "0x1", 1, "block_meta", "k1", "CREATE", {"number": "1"}),
@@ -170,7 +186,7 @@ def test_crash_at_manifest_swap_commits_nothing(
     def committed(pipe):
         return (
             sorted((r["id"], r["number"]) for r in pipe.table("block_meta").collect()),
-            pipe.state.read_manifest()["applied_epochs"],
+            pipe.state.read_manifest()["cursors"]["mod-hash-1"]["epoch"],
             pipe.cursors.get_cursor("mod-hash-1"),
         )
 
@@ -223,7 +239,7 @@ def test_merge_violation_fails_stream_batch(spark, tmp_path, block_meta_catalog,
     )
     with pytest.raises(Exception, match="invalid change sequence"):
         pipe.process_batch(batch, epoch_id=0)
-    assert not pipe.state.epoch_applied(0)
+    assert not pipe.state.epoch_applied("mod-hash-1", 0)
     assert pipe.table("block_meta").count() == 0
 
 
@@ -457,3 +473,87 @@ def test_run_with_retries_exhausts_and_raises(spark, tmp_path, block_meta_catalo
             on_restart=lambda n, exc: restart_log.append(n),
         )
     assert restart_log == [1, 2]
+
+
+def test_second_module_on_one_warehouse(spark, tmp_path, block_meta_catalog, changes_df):
+    """A redeployed module (new hash) on the same warehouse keeps its
+    own epoch progress: module B's epoch 0 commits after module A's
+    epochs 0 and 1 — updating a key A wrote, as a deletion-vector
+    sidecar, and creating a new key — and both cursors are right."""
+    wh = str(tmp_path / "shared_wh")
+
+    def pipe(mh):
+        return ChangesIngestPipeline(
+            spark, block_meta_catalog, warehouse_dir=wh,
+            checkpoint_dir=str(tmp_path / f"{mh}_ckpt"), module_hash=mh,
+        )
+
+    a, b = pipe("mod-a"), pipe("mod-b")
+    a.process_batch(changes_df([
+        (1, "0x1", 1, "block_meta", "k1", "CREATE", {"number": "1"}),
+        (1, "0x1", 2, "block_meta", "k2", "CREATE", {"number": "2"}),
+    ]), epoch_id=0)
+    a.process_batch(changes_df([
+        (2, "0x2", 1, "block_meta", "k1", "UPDATE", {"number": "11"}),
+    ]), epoch_id=1)
+    b.process_batch(changes_df([
+        (3, "0x3", 1, "block_meta", "k2", "UPDATE", {"number": "22"}),
+        (3, "0x3", 2, "block_meta", "k3", "CREATE", {"number": "3"}),
+    ]), epoch_id=0)
+
+    def rows():
+        return {r["id"]: r["number"] for r in b.table("block_meta").collect()}
+
+    assert rows() == {"k1": 11, "k2": 22, "k3": 3}
+    manifest = b.state.read_manifest()
+    assert manifest["version"] == 3
+    layers = [
+        layer["version"]
+        for v in manifest["tables"]["block_meta"]["buckets"].values()
+        if isinstance(v, dict)
+        for layer in v["files"]
+    ]
+    assert 2 in layers  # B's commit read version 2 and wrote a sidecar layer
+    cursors = {mh: (c["epoch"], c["block_num"], c["block_id"])
+               for mh, c in manifest["cursors"].items()}
+    assert cursors == {"mod-a": (1, 2, "0x2"), "mod-b": (0, 3, "0x3")}
+    assert b.state.epoch_applied("mod-b", 0) and not b.state.epoch_applied("mod-b", 1)
+    b.state.vacuum(keep_epochs=0)
+    assert rows() == {"k1": 11, "k2": 22, "k3": 3}
+
+
+def _shape(x):
+    """``x`` with every scalar replaced by None: equal shapes mean equal
+    container sizes and keys all the way down."""
+    if isinstance(x, dict):
+        return {k: _shape(v) for k, v in x.items()}
+    if isinstance(x, list):
+        return [_shape(v) for v in x]
+    return None
+
+
+def test_manifest_size_does_not_grow_with_epochs(
+    spark, tmp_path, block_meta_catalog, changes_df
+):
+    """Per-epoch metadata is O(1) over an unbounded stream: after N
+    epochs and ``vacuum(keep_epochs=1)`` the manifest has the same shape
+    for N=2 and N=6 — no per-epoch list or map survives."""
+
+    def manifest_after(n):
+        pipe = ChangesIngestPipeline(
+            spark, block_meta_catalog,
+            warehouse_dir=str(tmp_path / f"n{n}_wh"),
+            checkpoint_dir=str(tmp_path / f"n{n}_ckpt"),
+            module_hash="mod-hash-1", write_mode="rewrite",
+        )
+        for epoch in range(n):
+            op = "CREATE" if epoch == 0 else "UPDATE"
+            pipe.process_batch(changes_df([
+                (epoch + 1, f"0x{epoch + 1}", 1, "block_meta", "k1", op, {"number": str(epoch)}),
+            ]), epoch_id=epoch)
+        pipe.state.vacuum(keep_epochs=1)
+        return pipe.state.read_manifest()
+
+    short, long = manifest_after(2), manifest_after(6)
+    assert _shape(long) == _shape(short)
+    assert long["cursors"]["mod-hash-1"]["epoch"] == 5

@@ -4,6 +4,7 @@
 # 1. schema audit  — no driver-hostile complex output columns
 # 2. oracle gate   — every queries() entry vs its DuckDB oracle
 # 3. unit tests    — merge kernel, streaming, codecs, plan shapes, ...
+# 4. benchmark reference fold — perfbench's independent CDC fold
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.01}"
@@ -60,5 +61,8 @@ if [ "$N_SKIPS" != "$N_KNOWN" ]; then
 fi
 echo "skips: $N_SKIPS, all pinned to the known env gate"
 rm -f "$PYTEST_OUT"
+
+echo "== benchmark reference fold (perfbench/tests) =="
+python -m pytest perfbench/tests -q
 
 echo "CI green."

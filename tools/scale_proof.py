@@ -1,7 +1,8 @@
 """Scale proof for the dedup/ANN paths: run ``dedup_minhash`` and
 ``sim_lsh`` at sf0.1 and at a synthesized 10x corpus (sf1-equivalent;
 the driver ships no sf1 fixtures), recording wall time and shuffle
-read/write bytes from the Spark REST API.  Results land in SCALE.md.
+read/write bytes from the in-process stage metrics.  Results land in
+SCALE.md.
 
 The 10x corpus is deterministic: each sf0.1 document/embedding row is
 expanded into 10 variants (distinct suffix token / perturbed tail
@@ -16,11 +17,12 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
+
+from substreams_sink_clickhouse_spark.profile import stage_totals
 
 SCRATCH = "/tmp/sscs_scale"
 
@@ -144,17 +146,6 @@ def synth_100x(spark, src_dir: str, out_dir: str) -> None:
     o100.repartition(32).write.mode("overwrite").parquet(f"{out_dir}/orders.parquet")
 
 
-def rest_stage_totals(ui_port: int) -> tuple[int, int]:
-    """(shuffle_read_bytes, shuffle_write_bytes) summed over all stages."""
-    base = f"http://localhost:{ui_port}/api/v1/applications"
-    apps = json.load(urllib.request.urlopen(base, timeout=10))
-    app_id = apps[0]["id"]
-    stages = json.load(urllib.request.urlopen(f"{base}/{app_id}/stages", timeout=10))
-    rd = sum(s.get("shuffleReadBytes", 0) for s in stages)
-    wr = sum(s.get("shuffleWriteBytes", 0) for s in stages)
-    return rd, wr
-
-
 def main_100x() -> None:
     """100x throughput proof: dedup_minhash / dedup_ngram_stats /
     ingest at sf0.1 vs a 100x synthesized corpus (see synth_100x)."""
@@ -164,9 +155,8 @@ def main_100x() -> None:
     )
     from substreams_sink_clickhouse_spark.session import get_spark
 
-    spark = get_spark("scale-proof-100x", extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark("scale-proof-100x")
     spark.sparkContext.setLogLevel("ERROR")
-    ui_port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[1])
     sf01 = "/root/testdata/sf0.1"
     sf10 = SCRATCH + "/sf10"
     synth_100x(spark, sf01, sf10)
@@ -177,28 +167,36 @@ def main_100x() -> None:
     ):
         for label, d in (("sf0.1", sf01), ("sf10(100x)", sf10)):
             builder(spark, d).count()  # warm codegen
-            rd0, wr0 = rest_stage_totals(ui_port)
+            before = stage_totals(spark)
             t0 = time.time()
             n = builder(spark, d).count()
             wall = time.time() - t0
-            rd1, wr1 = rest_stage_totals(ui_port)
+            after = stage_totals(spark)
             results[f"{name}@{label}"] = {
                 "rows": n,
                 "wall_s": round(wall, 3),
-                "shuffle_read_mb": round((rd1 - rd0) / 1e6, 2),
-                "shuffle_write_mb": round((wr1 - wr0) / 1e6, 2),
+                "shuffle_read_mb": round(
+                    (after["shuffle_read_bytes"] - before["shuffle_read_bytes"]) / 1e6, 2
+                ),
+                "shuffle_write_mb": round(
+                    (after["shuffle_write_bytes"] - before["shuffle_write_bytes"]) / 1e6, 2
+                ),
             }
             print(f"{name}@{label}: {results[f'{name}@{label}']}", flush=True)
     from bench import bench_ingest
 
     for label, d in (("sf0.1", sf01), ("sf10(100x)", sf10)):
-        rd0, wr0 = rest_stage_totals(ui_port)
+        before = stage_totals(spark)
         wall = bench_ingest(spark, d)
-        rd1, wr1 = rest_stage_totals(ui_port)
+        after = stage_totals(spark)
         results[f"ingest_e2e@{label}"] = {
             "wall_s": round(wall, 3),
-            "shuffle_read_mb": round((rd1 - rd0) / 1e6, 2),
-            "shuffle_write_mb": round((wr1 - wr0) / 1e6, 2),
+            "shuffle_read_mb": round(
+                (after["shuffle_read_bytes"] - before["shuffle_read_bytes"]) / 1e6, 2
+            ),
+            "shuffle_write_mb": round(
+                (after["shuffle_write_bytes"] - before["shuffle_write_bytes"]) / 1e6, 2
+            ),
         }
         print(f"ingest_e2e@{label}: {results[f'ingest_e2e@{label}']}", flush=True)
     print(json.dumps(results))
@@ -226,9 +224,8 @@ def main() -> None:
     from substreams_sink_clickhouse_spark.operators.text import _corpus_prep
     from substreams_sink_clickhouse_spark.session import get_spark
 
-    spark = get_spark("scale-proof", extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark("scale-proof")
     spark.sparkContext.setLogLevel("ERROR")
-    ui_port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[1])
 
     sf01 = "/root/testdata/sf0.1"
     sf1 = SCRATCH + "/sf1"
@@ -270,16 +267,20 @@ def main() -> None:
     for name, builder in cases:
         for label, d in (("sf0.1", sf01), ("sf1(10x)", sf1)):
             builder(spark, d).count()  # warm codegen
-            rd0, wr0 = rest_stage_totals(ui_port)
+            before = stage_totals(spark)
             t0 = time.time()
             n = builder(spark, d).count()
             wall = time.time() - t0
-            rd1, wr1 = rest_stage_totals(ui_port)
+            after = stage_totals(spark)
             results[f"{name}@{label}"] = {
                 "rows": n,
                 "wall_s": round(wall, 3),
-                "shuffle_read_mb": round((rd1 - rd0) / 1e6, 2),
-                "shuffle_write_mb": round((wr1 - wr0) / 1e6, 2),
+                "shuffle_read_mb": round(
+                    (after["shuffle_read_bytes"] - before["shuffle_read_bytes"]) / 1e6, 2
+                ),
+                "shuffle_write_mb": round(
+                    (after["shuffle_write_bytes"] - before["shuffle_write_bytes"]) / 1e6, 2
+                ),
             }
             print(f"{name}@{label}: {results[f'{name}@{label}']}")
     # ingest e2e (decode -> validate -> merge -> versioned commit +
@@ -288,13 +289,17 @@ def main() -> None:
     from bench import bench_ingest
 
     for label, d in () if names_arg else (("sf0.1", sf01), ("sf1(10x)", sf1)):
-        rd0, wr0 = rest_stage_totals(ui_port)
+        before = stage_totals(spark)
         wall = bench_ingest(spark, d)
-        rd1, wr1 = rest_stage_totals(ui_port)
+        after = stage_totals(spark)
         results[f"ingest_e2e@{label}"] = {
             "wall_s": round(wall, 3),
-            "shuffle_read_mb": round((rd1 - rd0) / 1e6, 2),
-            "shuffle_write_mb": round((wr1 - wr0) / 1e6, 2),
+            "shuffle_read_mb": round(
+                (after["shuffle_read_bytes"] - before["shuffle_read_bytes"]) / 1e6, 2
+            ),
+            "shuffle_write_mb": round(
+                (after["shuffle_write_bytes"] - before["shuffle_write_bytes"]) / 1e6, 2
+            ),
         }
         print(f"ingest_e2e@{label}: {results[f'ingest_e2e@{label}']}")
     print(json.dumps(results))

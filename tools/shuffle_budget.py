@@ -3,7 +3,7 @@
 Plan-shape regressions that add or widen exchanges are easy to miss
 locally (wall-clock noise swallows them) but fatal at 100 TB.  This
 tool executes every bench.py headline entry at sf0.1 and compares the
-measured shuffle read bytes (Spark REST stage totals, attributed
+measured shuffle read bytes (in-process stage totals, attributed
 per-entry) against the recorded budgets:
 
     python tools/shuffle_budget.py --record   # (re)write tools/shuffle_budgets.json
@@ -21,24 +21,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BUDGET_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "shuffle_budgets.json")
-
-
-def _stage_totals(ui_port: int) -> int:
-    with urllib.request.urlopen(
-        f"http://localhost:{ui_port}/api/v1/applications", timeout=10
-    ) as r:
-        app = json.load(r)[0]["id"]
-    with urllib.request.urlopen(
-        f"http://localhost:{ui_port}/api/v1/applications/{app}/stages?status=complete",
-        timeout=10,
-    ) as r:
-        stages = json.load(r)
-    return sum(s.get("shuffleReadBytes", 0) for s in stages)
 
 
 def main() -> int:
@@ -47,21 +33,21 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod
     from bench import HEADLINE
+    from substreams_sink_clickhouse_spark.profile import stage_totals
     from substreams_sink_clickhouse_spark.session import get_spark
     from substreams_sink_clickhouse_spark.sources.tables import warm_tables
 
-    spark = get_spark("shuffle-budget", extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark("shuffle-budget")
     spark.sparkContext.setLogLevel("ERROR")
-    ui_port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[1])
     warm_tables(spark, sf_dir)
     queries = entry_mod.queries()
 
     measured: dict[str, int] = {}
     for name in HEADLINE:
         queries[name](spark, sf_dir).count()  # warm (codegen + caches)
-        before = _stage_totals(ui_port)
+        before = stage_totals(spark)["shuffle_read_bytes"]
         queries[name](spark, sf_dir).count()
-        measured[name] = _stage_totals(ui_port) - before
+        measured[name] = stage_totals(spark)["shuffle_read_bytes"] - before
 
     if record:
         with open(BUDGET_PATH, "w", encoding="utf-8") as fh:
